@@ -1,26 +1,43 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import java.nio.charset.StandardCharsets.UTF_8
+
+/** Counts of one merge, all observed on its snapshot-write job, and the
+  * version it committed. */
+final case class MergeResult(created: Long, modified: Long, failed: Long, version: Long,
+                             deleted: Long = 0L)
 
 /** Parquet-backed search-index store with merge-or-upload semantics.
   *
   * This is the engine's stand-in for the reference's Azure Search
   * indexes (both the path index and the data index): a keyed table
-  * where a batch write merges by key — latest write wins — and reports
-  * created/modified/failed counts, exactly the semantics of
-  * MergeOrUploadDocumentsAsync
+  * where a batch write merges by key — latest write wins, tombstones
+  * delete — and reports created/modified/deleted/failed counts, exactly
+  * the semantics of MergeOrUploadDocumentsAsync
   * (reference: AzureSearchIndexer/PathIndexClient.cs:24,
   * BatchingUploader.cs:35, DataLakeIndexer.cs:120-141 for the
   * failed-upload accounting).
   *
   * Storage layout: snapshot directories `v=N` under the index root;
   * a merge reads the live snapshot, unions the batch, window-dedups on
-  * the key and writes `v=N+1` — an atomic-swap pattern (the pointer is
-  * "largest committed version"), so readers never see partial writes.
-  * At cluster scale both sides of the merge shuffle once on the key;
-  * the batch is usually small ⇒ AQE broadcasts it.
+  * the key and writes `v=N+1`. A version counts only once its commit
+  * marker exists: the marker is written after Spark's job commit and
+  * holds the snapshot's schema, so readers never see an in-flight
+  * snapshot, a read needs no footer-reading job, and a snapshot with
+  * zero rows (a partitioned write of nothing leaves no data file) still
+  * reads back with its columns. Racing writers are not coordinated: two
+  * merges on the same base both write `v=N+1`, and one can replace the
+  * other. At cluster scale the merge shuffles snapshot and batch once,
+  * on the key.
+  *
+  * Every write's counts are `observe(...)` aggregates of the write job
+  * itself, taken by a listener on the written frame's own session (see
+  * `writeObserving`) — inside a streaming micro-batch too.
   *
   * All filesystem access goes through the Hadoop FileSystem API, so the
   * root may live on any supported store (local, HDFS, ABFS/ADLS, S3) —
@@ -33,167 +50,163 @@ import org.apache.spark.sql.functions._
   *   resolved arbitrarily — "latest write wins" is only well-defined if
   *   the caller says what "latest" means inside one batch.
   */
-final case class MergeResult(created: Long, modified: Long, failed: Long, version: Long)
-
 class IndexStore(spark: SparkSession, root: String, keyCol: String,
                  partitionCol: Option[String] = None,
                  seqCol: Option[String] = None) {
 
-  private def hadoopFs = new org.apache.hadoop.fs.Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def hadoopFs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def versions: Seq[Long] = {
-    val fs = hadoopFs
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(rootPath)) Seq.empty
-    else fs.listStatus(rootPath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
+  private def dir(v: Long): String = s"$root/v=$v"
+
+  private def marker(v: Long): Path = new Path(dir(v), "_graft_commit")
+
+  /** Committed versions, oldest first. */
+  private def versions: Seq[Long] =
+    Option(hadoopFs.globStatus(new Path(root, "v=*/_graft_commit"))).toSeq.flatten
+      .map(_.getPath.getParent.getName.stripPrefix("v=").toLong)
       .sorted
-  }
 
   def currentVersion: Option[Long] = versions.lastOption
 
-  def read(): Option[DataFrame] =
-    currentVersion.map(v => spark.read.parquet(s"$root/v=$v"))
+  /** Schema of the version this store last wrote or read. */
+  @volatile private var known: Option[(Long, StructType)] = None
 
-  /** Run `write` (one action) and harvest the named `observe(...)`
-    * metrics from its QueryExecution via a scoped listener. Returns
-    * None when the metrics never arrive — QueryExecutionListener does
-    * not fire for executions nested inside a streaming micro-batch
-    * (foreachBatch), so blocking unconditionally (as
-    * `org.apache.spark.sql.Observation.get` does) would hang there;
-    * callers fall back to computing the metrics directly instead.
-    */
-  private def writeObserving(names: Set[String])(write: => Unit): Option[Map[String, org.apache.spark.sql.Row]] = {
-    // inside a streaming micro-batch (foreachBatch) the listener will
-    // never fire — don't pay the timeout on every batch, go straight
-    // to the caller's fallback (the stream execution thread carries
-    // the query-id local property)
-    if (spark.sparkContext.getLocalProperty("sql.streaming.queryId") != null) {
-      write
-      return None
+  private def snapshot(v: Long): DataFrame = {
+    val schema = known.collect { case (`v`, s) => s }.getOrElse {
+      val in = hadoopFs.open(marker(v))
+      val s = try DataType.fromJson(new String(in.readAllBytes(), UTF_8)).asInstanceOf[StructType]
+        finally in.close()
+      known = Some(v -> s)
+      s
     }
-    @volatile var rows: Map[String, org.apache.spark.sql.Row] = Map.empty
-    val latch = new java.util.concurrent.CountDownLatch(1)
+    spark.read.schema(schema).parquet(dir(v))
+  }
+
+  def read(): Option[DataFrame] = currentVersion.map(snapshot)
+
+  /** Write `df` as snapshot `v` — one action — commit it, and return
+    * the metrics `df` observes under `name` in that same job.
+    *
+    * Every snapshot writer goes through here so the hive-partitioned
+    * layout (→ partition pruning for "filesystem eq 'x'" reads) survives
+    * merges and compactions alike. The commit marker holds the schema
+    * a read returns: data columns, then the partition column. The
+    * observation must be the top of `df`: AQE drops the subtree under
+    * an exchange that turns out empty, observations included.
+    *
+    * The listener is registered on `df.sparkSession`, the session the
+    * write executes in: a QueryExecutionListener hears only executions
+    * of the session it is registered on, and inside a streaming
+    * foreachBatch the batch frame belongs to the session the stream
+    * cloned at start, not to the one the caller holds. Metrics that
+    * never arrive are an error; the snapshot then stays uncommitted.
+    */
+  private def writeObserving(df: DataFrame, v: Long, name: String): Row = {
+    val observed = new java.util.concurrent.CompletableFuture[Row]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = {
-        val hit = qe.observedMetrics.filter { case (k, _) => names(k) }
-        if (hit.size == names.size) { rows = hit; latch.countDown() }
-      }
+                             durationNs: Long): Unit =
+        qe.observedMetrics.get(name).foreach(observed.complete)
       override def onFailure(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
     }
-    spark.listenerManager.register(listener)
-    try {
-      write
-      if (latch.await(5, java.util.concurrent.TimeUnit.SECONDS)) Some(rows) else None
-    } finally spark.listenerManager.unregister(listener)
+    val session = df.sparkSession
+    session.listenerManager.register(listener)
+    val metrics = try {
+      val writer = df.write.mode(SaveMode.Overwrite)
+      partitionCol.fold(writer)(c => writer.partitionBy(c)).parquet(dir(v))
+      try observed.get(60, java.util.concurrent.TimeUnit.SECONDS)
+      catch { case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(s"no observed metrics for ${dir(v)}: left uncommitted") }
+    } finally session.listenerManager.unregister(listener)
+    val (part, data) = df.schema.fields.partition(f => partitionCol.contains(f.name))
+    val schema = StructType(data ++ part)
+    val out = hadoopFs.create(marker(v), false)
+    try out.write(schema.json.getBytes(UTF_8)) finally out.close()
+    known = Some(v -> schema)
+    metrics
   }
 
   /** Unwrap an observed aggregate (null on zero rows → 0). */
-  private def metric(m: org.apache.spark.sql.Row, name: String): Long = {
+  private def metric(m: Row, name: String): Long = {
     val i = m.fieldIndex(name)
     if (m.isNullAt(i)) 0L else m.getLong(i)
   }
 
-  /** Every snapshot writer goes through here so the hive-partitioned
-    * layout (→ partition pruning for "filesystem eq 'x'" reads)
-    * survives merges, compactions and deletes alike.
-    */
-  private def writeSnapshot(df: DataFrame, v: Long): Unit = {
-    val writer = df.write.mode(SaveMode.Overwrite)
-    partitionCol.fold(writer)(c => writer.partitionBy(c)).parquet(s"$root/v=$v")
-  }
-
-  /** Within-batch then batch-vs-snapshot precedence for the merge
-    * window: highest `_seq` first (batch=1 beats snapshot=0), then the
-    * caller's sequence column descending when configured.
+  /** Precedence for the merge window: accepted rows first (a rejected
+    * row never displaces one), then highest `_seq` (batch=1 beats
+    * snapshot=0), then the caller's sequence column descending when
+    * configured.
     */
   private def mergeOrder: Seq[Column] =
-    col("_seq").desc +: seqCol.map(c => col(c).desc).toSeq
+    Seq(col("_rej").asc, col("_seq").desc) ++ seqCol.map(c => col(c).desc)
 
   /** Merge-or-upload a batch: batch rows override snapshot rows per
     * key; ties within the batch resolved by `seqCol` (see class doc).
-    * Returns created/modified/failed counts like UpsertPathsResult
-    * (reference: Models/UpsertPathsResult.cs).
+    * Returns created/modified/deleted/failed counts like
+    * UpsertPathsResult (reference: Models/UpsertPathsResult.cs).
     *
     * @param reject failure injection: rows matching this predicate are
     *   NOT merged and are counted in `MergeResult.failed` — the analog
     *   of per-document upload failures in the service response
     *   (reference: DataLakeIndexer.cs:120-141 UploadFailedCount).
+    * @param tombstone optional boolean column of `batch` marking
+    *   tombstone rows (the deleted-paths flow); it is dropped before
+    *   the write. A key's winning row decides its fate: an upsert
+    *   survives, a tombstone removes the key — counted in `deleted` if
+    *   the snapshot held it, a no-op otherwise.
     */
-  def mergeOrUpload(batch: DataFrame, reject: Option[Column] = None): MergeResult = {
-    val existing = read()
+  def mergeOrUpload(batch: DataFrame, reject: Option[Column] = None,
+                    tombstone: Option[String] = None): MergeResult = {
     val prevV = currentVersion
     val nextV = prevV.getOrElse(-1L) + 1
 
-    // ALL metrics ride the snapshot-write job as observed aggregates
-    // (CollectMetrics accumulators): one pass over the merge window, no
-    // snapshot re-counts, and — because the batch plan executes exactly
-    // once — the failed count can never disagree with what was written,
-    // even for a nondeterministic batch frame.
-    val tag = java.util.UUID.randomUUID().toString
-    val batchName = s"graft_batch_$tag"
-    val mergeName = s"graft_merge_$tag"
+    // ALL metrics are one observation over the merge window's winners,
+    // taken by the snapshot-write job itself: no snapshot re-counts, and
+    // — because the batch plan executes exactly once — the failed count
+    // can never disagree with what was written, even for a
+    // nondeterministic batch frame. A NULL reject result counts as
+    // rejected: under three-valued logic filter(p) and filter(!p) would
+    // BOTH drop the row — it would vanish from the merge and the
+    // failure count alike.
+    val incoming = batch
+      .withColumn("_rej", reject.fold(lit(false))(p => coalesce(p, lit(true))))
+      .withColumn("_del", tombstone.fold(lit(false))(c => coalesce(col(c), lit(false))))
+      .drop(tombstone.toSeq: _*)
+      .withColumn("_seq", lit(1))
+    // allowMissingColumns: batches may add columns over time (schema
+    // evolution); absent columns null-fill on either side
+    val tagged = prevV.map(snapshot).fold(incoming)(cur =>
+      cur.withColumn("_rej", lit(false)).withColumn("_del", lit(false)).withColumn("_seq", lit(0))
+        .unionByName(incoming, allowMissingColumns = true))
+    // the per-key flags share the row_number window's partitioning — no
+    // extra shuffle. _had: the snapshot held the key; _nrej: the key's
+    // rejected rows, counted once on its winner. The winning row of any
+    // key the batch touched with an accepted row is a batch row, so its
+    // _del and _had decide created, modified or deleted. Catalyst does
+    // not push filters through CollectMetrics: the observation sees the
+    // tombstoned and rejected winners the last filter drops.
+    val byKey = Window.partitionBy(col(keyCol))
+    val won = col("_seq") === 1 && !col("_rej")
+    val name = s"graft_merge_${java.util.UUID.randomUUID()}"
+    val merged = tagged
+      .withColumn("_rn", row_number().over(byKey.orderBy(mergeOrder: _*)))
+      .withColumn("_had", min(col("_seq")).over(byKey) === 0)
+      .withColumn("_nrej", count_if(col("_rej")).over(byKey))
+      .filter(col("_rn") === 1)
+      .observe(name,
+        count_if(won && !col("_del") && !col("_had")).as("created"),
+        count_if(won && !col("_del") && col("_had")).as("modified"),
+        count_if(won && col("_del") && col("_had")).as("deleted"),
+        sum(col("_nrej")).as("failed"))
+      .filter(!col("_rej") && !col("_del"))
+      .drop("_rn", "_seq", "_had", "_nrej", "_rej", "_del")
 
-    // a NULL predicate result counts as rejected: under three-valued
-    // logic filter(p) and filter(!p) would BOTH drop the row — it would
-    // vanish from the merge and the failure count alike. (Catalyst does
-    // not push filters through CollectMetrics, so the reject filter
-    // below cannot starve the observed sum.)
-    val flagged = batch
-      .withColumn("_rej", reject.map(p => coalesce(p, lit(true))).getOrElse(lit(false)))
-      .observe(batchName, sum(col("_rej").cast("long")).as("failed"))
-    val accepted = flagged.filter(!col("_rej")).drop("_rej")
-
-    val deduped = existing match {
-      case None =>
-        val within =
-          if (seqCol.isDefined) {
-            val w = Window.partitionBy(col(keyCol)).orderBy(seqCol.map(c => col(c).desc).toSeq: _*)
-            accepted.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-          } else accepted.dropDuplicates(keyCol)
-        within.observe(mergeName,
-          count(lit(1)).as("created"),
-          sum(lit(0L)).as("modified"))
-      case Some(cur) =>
-        // allowMissingColumns: batches may add columns over time
-        // (schema evolution); absent columns null-fill on either side
-        val tagged = cur.withColumn("_seq", lit(0))
-          .unionByName(accepted.withColumn("_seq", lit(1)), allowMissingColumns = true)
-        val w = Window.partitionBy(col(keyCol)).orderBy(mergeOrder: _*)
-        // per-key "did the snapshot already hold this key" flag shares
-        // the row_number window's partitioning — no extra shuffle. The
-        // surviving row for any batch-touched key is always a batch row
-        // (_seq sorts first), so _seq=1 ∧ _had=0 ⇔ created and
-        // _seq=1 ∧ _had=1 ⇔ modified.
-        tagged.withColumn("_rn", row_number().over(w))
-          .withColumn("_had",
-            max(when(col("_seq") === 0, 1).otherwise(0)).over(Window.partitionBy(col(keyCol))))
-          .filter(col("_rn") === 1)
-          .observe(mergeName,
-            sum(when(col("_seq") === 1 && col("_had") === 0, 1L).otherwise(0L)).as("created"),
-            sum(when(col("_seq") === 1 && col("_had") === 1, 1L).otherwise(0L)).as("modified"))
-          .drop("_rn", "_seq", "_had")
-    }
-
-    writeObserving(Set(batchName, mergeName)) { writeSnapshot(deduped, nextV) } match {
-      case Some(rows) =>
-        MergeResult(metric(rows(mergeName), "created"), metric(rows(mergeName), "modified"),
-          metric(rows(batchName), "failed"), nextV)
-      case None =>
-        // listener never fired (streaming micro-batch context): recompute
-        // from the written snapshots — extra actions, same answers
-        val failed = reject.map(p => batch.filter(coalesce(p, lit(true))).count()).getOrElse(0L)
-        val newCount = spark.read.parquet(s"$root/v=$nextV").count()
-        val created = newCount - prevV.map(v => spark.read.parquet(s"$root/v=$v").count()).getOrElse(0L)
-        val batchKeys = accepted.select(col(keyCol)).distinct().count()
-        MergeResult(created, batchKeys - created, failed, nextV)
-    }
+    val m = writeObserving(merged, nextV, name)
+    MergeResult(metric(m, "created"), metric(m, "modified"), metric(m, "failed"), nextV,
+      metric(m, "deleted"))
   }
 
   /** Rewrite the live snapshot into `numFiles` part files — the
@@ -201,19 +214,12 @@ class IndexStore(spark: SparkSession, root: String, keyCol: String,
     * incremental merges (thousands of tiny parquet files kill scan
     * throughput; the optimize pass restores fat, scan-friendly files).
     */
-  def optimize(numFiles: Int = 1): Long = {
-    read() match {
-      case None => 0L
-      case Some(cur) =>
-        val nextV = currentVersion.get + 1
-        val name = s"graft_opt_${java.util.UUID.randomUUID()}"
-        // counted during the rewrite job; fallback scans only if the
-        // listener context swallowed the metrics (streaming micro-batch)
-        writeObserving(Set(name)) {
-          writeSnapshot(cur.observe(name, count(lit(1)).as("n")).repartition(numFiles), nextV)
-        }.map(rows => metric(rows(name), "n"))
-          .getOrElse(spark.read.parquet(s"$root/v=$nextV").count())
-    }
+  def optimize(numFiles: Int = 1): Long = currentVersion match {
+    case None => 0L
+    case Some(v) =>
+      val name = s"graft_opt_${java.util.UUID.randomUUID()}"
+      metric(writeObserving(
+        snapshot(v).repartition(numFiles).observe(name, count(lit(1)).as("n")), v + 1, name), "n")
   }
 
   /** Drop all but the newest `keepLast` snapshot versions (vacuum).
@@ -224,31 +230,16 @@ class IndexStore(spark: SparkSession, root: String, keyCol: String,
     require(keepLast >= 1, "must keep at least the live snapshot")
     val fs = hadoopFs
     val old = versions.dropRight(keepLast)
-    old.foreach(v => fs.delete(new org.apache.hadoop.fs.Path(s"$root/v=$v"), true))
+    old.foreach(v => fs.delete(new Path(dir(v)), true))
     old.length
   }
 
-  /** Delete-by-key (the deleted-paths flow): next snapshot excludes the
-    * tombstoned keys.
+  /** Delete-by-key (the deleted-paths flow): the keys merge in as
+    * tombstones. Returns how many keys the snapshot held; a no-op on an
+    * empty store.
     */
-  def deleteKeys(keys: DataFrame): Long = {
-    read() match {
-      case None => 0L
-      case Some(cur) =>
-        val nextV = currentVersion.get + 1
-        // left join + null filter instead of left_anti so the tombstone
-        // hits can be counted inside the write job (no before/after
-        // snapshot counts)
-        val name = s"graft_del_${java.util.UUID.randomUUID()}"
-        val marked = cur
-          .join(keys.select(col(keyCol)).distinct().withColumn("_del", lit(true)), Seq(keyCol), "left")
-          .observe(name, sum(when(col("_del"), 1L).otherwise(0L)).as("deleted"))
-        writeObserving(Set(name)) {
-          writeSnapshot(marked.filter(col("_del").isNull).drop("_del"), nextV)
-        }.map(rows => metric(rows(name), "deleted")).getOrElse {
-          spark.read.parquet(s"$root/v=${nextV - 1}").count() -
-            spark.read.parquet(s"$root/v=$nextV").count()
-        }
-    }
-  }
+  def deleteKeys(keys: DataFrame): Long =
+    if (currentVersion.isEmpty) 0L
+    else mergeOrUpload(keys.select(col(keyCol)).withColumn("_tombstone", lit(true)),
+      tombstone = Some("_tombstone")).deleted
 }

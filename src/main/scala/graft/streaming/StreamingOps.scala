@@ -185,15 +185,16 @@ object StreamingOps extends QueryPack {
 
   /** The reference's event-driven indexing loop in Structured Streaming
     * form: EventGrid envelope JSON streams in as (event_id, envelope);
-    * each micro-batch parses the full envelope schema, reduces to the
+    * each micro-batch parses the full envelope schema once, counts dead
+    * letters and live events in one small aggregate, reduces to the
     * LATEST action per key (a create and a delete of the same path in
-    * one batch resolve by eventTime, then event_id), and dispatches —
-    * BlobCreated/Modified upserts the path index, BlobDeleted
-    * tombstones it (reference:
+    * one batch resolve by eventTime, then event_id), and commits ONE
+    * snapshot: BlobCreated/Modified rows upsert the path index and
+    * BlobDeleted rows ride the same merge as tombstones (reference:
     * DatalakePathIndexerFunc/PathIndexerFunc.cs:18-60, the service-bus
     * trigger doing exactly this per message batch).
-    */
-  /** @param metrics optional per-batch metrics sink counting malformed
+    *
+    * @param metrics optional per-batch metrics sink counting malformed
     *   envelopes (the reference's caught deserialization failures) —
     *   without it corrupt events would vanish untraceably. Recorded
     *   KEYED BY batchId with last-write-wins semantics, because the
@@ -212,28 +213,27 @@ object StreamingOps extends QueryPack {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         metrics.foreach(_.noteBatch(batchId))
-        if (!batch.isEmpty) {
-          val parsed = graft.operators.PathIndexOps.parseBlobEnvelopes(batch).persist()
-          try {
-            metrics.foreach(m => m.recordDeadLetters(batchId,
-              parsed.filter(col("action") === "dead-letter").count()))
+        val parsed = graft.operators.PathIndexOps.parseBlobEnvelopes(batch).persist()
+        try {
+          val dead = col("action") === "dead-letter"
+          val n = parsed.agg(count_if(dead), count_if(!dead)).head()
+          metrics.foreach(_.recordDeadLetters(batchId, n.getLong(0)))
+          if (n.getLong(1) > 0) {
             // eventTime compares as a TIMESTAMP: lexicographic strings
             // misorder mixed fractional precision ("…01Z" vs "…01.5Z")
             // and non-Z offsets, which could resurrect a deleted blob
             val w = org.apache.spark.sql.expressions.Window
               .partitionBy(col("key"))
               .orderBy(to_timestamp(col("eventTime")).desc, col("event_id").desc)
-            val latest = parsed.withColumn("_rn",
-                org.apache.spark.sql.functions.row_number().over(w))
-              .filter(col("_rn") === 1).drop("_rn")
-            val ups = latest.filter(col("action") === "upsert")
+            val latest = parsed.filter(!dead)
+              .withColumn("_rn", row_number().over(w))
+              .filter(col("_rn") === 1)
               .select(col("key"), col("filesystem"), col("pathUrlEncoded"),
-                col("eTag"), col("contentLength"), col("eventTime"))
-            val dels = latest.filter(col("action") === "tombstone").select(col("key"))
-            if (!ups.isEmpty) { store.mergeOrUpload(ups); () }
-            if (!dels.isEmpty) { store.deleteKeys(dels); () }
-          } finally { parsed.unpersist(); () }
-        }
+                col("eTag"), col("contentLength"), col("eventTime"),
+                (col("action") === "tombstone").as("_tombstone"))
+            store.mergeOrUpload(latest, tombstone = Some("_tombstone"))
+          }
+        } finally { parsed.unpersist(); () }
         ()
       }
       .start()

@@ -213,4 +213,202 @@ class SourcesSpec extends SparkSpec {
     assert(rows.map(_.getAs[Long]("length")).sorted.sameElements(Array(2L, 3L)))
     assert(rows.forall(r => r.getAs[Array[Byte]]("content").length == r.getAs[Long]("length")))
   }
+
+  /** Spark jobs started while `body` runs: a sentinel job marks the end,
+    * and listener events arrive in order, so every job `body` started
+    * has been seen once the sentinel has. */
+  private def jobsDuring(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("?"))
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription("graft-sentinel")
+      try spark.range(1).collect() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("graft-sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains("graft-sentinel"))
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq.filterNot(_ == "graft-sentinel")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def keysOf(store: IndexStore): Seq[String] =
+    store.read().toSeq.flatMap(_.select("key").collect().map(_.getString(0))).sorted
+
+  test("IndexStore tombstone merge: created, modified and deleted from one action") {
+    val root = Files.createTempDirectory("graft_idx_tomb").toString
+    val store = new IndexStore(spark, root, "key")
+    import spark.implicits._
+    store.mergeOrUpload(Seq(("k1", "v1", false), ("k2", "v2", false), ("k3", "v3", false))
+      .toDF("key", "value", "gone"), tombstone = Some("gone"))
+
+    val executions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = executions.incrementAndGet()
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // k1 modified, k2 deleted, k4 created, k9 a tombstone for an
+      // absent key (no-op), bad rejected
+      val r = store.mergeOrUpload(
+        Seq(("k1", "v1b", false), ("k2", null, true), ("k4", "v4", false),
+          ("k9", null, true), ("bad", "x", false)).toDF("key", "value", "gone"),
+        reject = Some(col("key") === "bad"), tombstone = Some("gone"))
+      assert(r == graft.sources.MergeResult(created = 1, modified = 1, failed = 1, version = 1, deleted = 1))
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (executions.get() < 1 && System.nanoTime() < deadline) Thread.sleep(50)
+      Thread.sleep(500)
+      assert(executions.get() == 1,
+        s"a tombstone merge should be a single action (the snapshot write), saw ${executions.get()}")
+    } finally spark.listenerManager.unregister(listener)
+
+    val state = store.read().get
+    assert(state.columns.sameElements(Array("key", "value"))) // tombstone column dropped
+    assert(state.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
+      Map("k1" -> "v1b", "k3" -> "v3", "k4" -> "v4"))
+  }
+
+  test("IndexStore tombstones: absent keys are a no-op, a later upsert resurrects a deleted key") {
+    val root = Files.createTempDirectory("graft_idx_tomb2").toString
+    val store = new IndexStore(spark, root, "key", seqCol = Some("ts"))
+    import spark.implicits._
+    store.mergeOrUpload(Seq(("a", 1L, false), ("b", 1L, false)).toDF("key", "ts", "del"),
+      tombstone = Some("del"))
+    val noop = store.mergeOrUpload(Seq(("zz", 2L, true)).toDF("key", "ts", "del"), tombstone = Some("del"))
+    assert(noop.created == 0 && noop.modified == 0 && noop.deleted == 0)
+    assert(keysOf(store) == Seq("a", "b"))
+    // within one batch the caller's sequence column picks the winner:
+    // b's later tombstone beats its earlier upsert
+    val del = store.mergeOrUpload(Seq(("b", 3L, false), ("b", 4L, true)).toDF("key", "ts", "del"),
+      tombstone = Some("del"))
+    assert(del.deleted == 1 && del.modified == 0 && keysOf(store) == Seq("a"))
+    val back = store.mergeOrUpload(Seq(("b", 5L, false)).toDF("key", "ts", "del"), tombstone = Some("del"))
+    assert(back.created == 1 && back.deleted == 0 && keysOf(store) == Seq("a", "b"))
+    assert(store.deleteKeys(Seq("a", "nope").toDF("key")) == 1)
+    assert(keysOf(store) == Seq("b"))
+  }
+
+  test("IndexStore schema-evolving merge with tombstones still null-fills") {
+    val root = Files.createTempDirectory("graft_idx_tomb3").toString
+    val store = new IndexStore(spark, root, "key")
+    import spark.implicits._
+    store.mergeOrUpload(Seq(("a", 1), ("b", 2)).toDF("key", "n"))
+    val r = store.mergeOrUpload(Seq(("c", 3, "t", false), ("b", 0, null, true))
+      .toDF("key", "n", "tag", "del"), tombstone = Some("del"))
+    assert(r.created == 1 && r.deleted == 1)
+    val state = store.read().get
+    assert(state.columns.sorted.sameElements(Array("key", "n", "tag")))
+    val byKey = state.collect().map(r => r.getAs[String]("key") -> r.getAs[String]("tag")).toMap
+    assert(byKey == Map("a" -> null, "c" -> "t"))
+  }
+
+  test("IndexStore: an empty or tombstone-only batch into an empty store stays readable") {
+    import spark.implicits._
+    for (part <- Seq(None, Some("fs"))) {
+      def open(root: String) = new IndexStore(spark, root, "key", partitionCol = part)
+      def rows(s: IndexStore) = s.read().map(_.count()).getOrElse(0L)
+
+      val root = Files.createTempDirectory("graft_idx_empty").toString
+      val store = open(root)
+      val r = store.mergeOrUpload(Seq.empty[(String, String, Int)].toDF("key", "fs", "n"))
+      assert(r.created == 0 && r.modified == 0 && r.deleted == 0, s"partition=$part")
+      assert(rows(store) == 0 && rows(open(root)) == 0, s"partition=$part")
+      store.mergeOrUpload(Seq(("k1", "fs0", 1)).toDF("key", "fs", "n"))
+      assert(rows(store) == 1 && rows(open(root)) == 1, s"partition=$part")
+
+      val root2 = Files.createTempDirectory("graft_idx_empty_tomb").toString
+      val store2 = open(root2)
+      val r2 = store2.mergeOrUpload(Seq(("k1", "fs0", 1, true)).toDF("key", "fs", "n", "del"),
+        tombstone = Some("del"))
+      assert(r2.created == 0 && r2.deleted == 0, s"partition=$part")
+      assert(rows(store2) == 0 && rows(open(root2)) == 0, s"partition=$part")
+      val cols = open(root2).read().map(_.columns.toSeq).getOrElse(Nil)
+      assert(cols.isEmpty || cols.sorted == Seq("fs", "key", "n"), s"partition=$part: $cols")
+      assert(store2.deleteKeys(Seq("k1").toDF("key")) == 0)
+      store2.mergeOrUpload(Seq(("k2", "fs1", 2, false)).toDF("key", "fs", "n", "del"),
+        tombstone = Some("del"))
+      assert(keysOf(open(root2)) == Seq("k2"), s"partition=$part")
+
+      // every row rejected: nothing reaches the merge window's shuffle,
+      // and the failures must still be counted
+      val root3 = Files.createTempDirectory("graft_idx_empty_rej").toString
+      val r3 = open(root3).mergeOrUpload(Seq(("k1", "fs0", -1), ("k2", "fs1", -2)).toDF("key", "fs", "n"),
+        reject = Some(col("n") < 0))
+      assert(r3.failed == 2 && r3.created == 0, s"partition=$part")
+      assert(rows(open(root3)) == 0, s"partition=$part")
+    }
+  }
+
+  test("IndexStore: a reader polling during a large merge never sees an uncommitted snapshot") {
+    val root = Files.createTempDirectory("graft_idx_poll").toString
+    val store = new IndexStore(spark, root, "key")
+    import spark.implicits._
+    store.mergeOrUpload(Seq(("seed", 0L)).toDF("key", "n"))
+    // each of the batch's four partitions stalls on its first row, which
+    // holds the write job — and its v=1 directory — open for seconds
+    val stall = udf { (n: Long) => if (n % 50000 == 0) Thread.sleep(2000); n }
+    val big = spark.range(0, 200000, 1, 4).select(col("id").cast("string").as("key"), stall(col("id")).as("n"))
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val writer = new Thread(() => try { store.mergeOrUpload(big); () } catch { case t: Throwable => failure.set(t) })
+    writer.start()
+    // a separate store object: nothing cached from the writer's side
+    val reader = new IndexStore(spark, root, "key")
+    var polls = 0
+    var sawInFlight = false
+    while (writer.isAlive) {
+      val inFlight = new java.io.File(s"$root/v=1").exists()
+      val v = reader.currentVersion
+      val n = reader.read().get.count()
+      assert(v.contains(0L) || v.contains(1L), s"version $v")
+      assert(n == 1L || n == 200001L, s"reader saw a partial snapshot: $n rows")
+      if (inFlight && v.contains(0L)) sawInFlight = true
+      polls += 1
+    }
+    writer.join()
+    assert(failure.get() == null, s"merge failed: ${failure.get()}")
+    assert(sawInFlight, s"the $polls polls never overlapped the in-flight write")
+    assert(reader.currentVersion.contains(1L) && reader.read().get.count() == 200001L)
+  }
+
+  test("IndexStore read() reuses the committed schema: no footer job, same schema as a fresh store") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_idx_schema").toString
+    def fresh = new IndexStore(spark, root, "key", partitionCol = Some("part"))
+    val store = fresh
+    // numeric-looking partition values: a path-inferring read would turn
+    // the column into an integer
+    store.mergeOrUpload(Seq(("a", 1L, "1"), ("b", 2L, "02")).toDF("key", "n", "part"))
+    assert(store.read().get.schema == fresh.read().get.schema)
+    store.mergeOrUpload(Seq(("c", 3L, "1", "t")).toDF("key", "n", "part", "tag"))
+    val schema = store.read().get.schema
+    assert(schema == fresh.read().get.schema)
+    assert(schema.fieldNames.sameElements(Array("key", "n", "tag", "part")))
+    assert(schema("part").dataType == StringType)
+    assert(store.read().get.filter(col("part") === "02").select("key").collect().map(_.getString(0))
+      .sameElements(Array("b")))
+    val jobs = jobsDuring { store.read().get.schema; fresh.read().get.schema; () }
+    assert(jobs.isEmpty, s"read() ran Spark jobs: $jobs")
+
+    // unpartitioned: the committed schema is exactly what Spark infers
+    // from the files, nested and timestamp columns included
+    val root2 = Files.createTempDirectory("graft_idx_schema2").toString
+    val store2 = new IndexStore(spark, root2, "key")
+    store2.mergeOrUpload(Seq(("a", 1L)).toDF("key", "n"))
+    store2.mergeOrUpload(Seq(("b", 2L)).toDF("key", "n")
+      .withColumn("at", current_timestamp()).withColumn("s", struct(col("n").as("m"), lit("x").as("y"))))
+    val v = store2.currentVersion.get
+    assert(store2.read().get.schema == spark.read.parquet(s"$root2/v=$v").schema)
+    assert(new IndexStore(spark, root2, "key").read().get.schema == spark.read.parquet(s"$root2/v=$v").schema)
+  }
 }

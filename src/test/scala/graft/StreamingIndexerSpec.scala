@@ -197,4 +197,72 @@ class StreamingIndexerSpec extends SparkSpec {
     assert(got == twin, s"store state $got != batch twin $twin")
     assert(twin.size == 3) // a (modified), c, d — b tombstoned
   }
+
+  private def envelope(id: Long, fs: String, path: String, evType: String, t: String): (Long, String) =
+    id -> (s"""{"topic":"/subscriptions/s/resourceGroups/r/providers/Microsoft.Storage/storageAccounts/a",""" +
+      s""""subject":"/blobServices/default/containers/$fs/blobs/$path","eventType":"Microsoft.Storage.$evType",""" +
+      s""""eventTime":"$t","id":"$id","data":{"api":"x","eTag":"etag$id","contentType":"application/json",""" +
+      s""""contentLength":${id * 10},"blobType":"BlockBlob","url":"https://acct.dfs.core.windows.net/$fs/$path",""" +
+      s""""sequencer":"s$id"},"dataVersion":"1","metadataVersion":"1"}""")
+
+  test("one envelope micro-batch with upserts and deletes commits exactly one snapshot") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ckDir = Files.createTempDirectory("graft_env1_ck").toString
+    val idxDir = Files.createTempDirectory("graft_env1_idx").toString
+    val store = new IndexStore(spark, idxDir, "key")
+    val input = MemoryStream[(Long, String)]
+    val query = graft.streaming.StreamingOps.indexBlobEventStream(
+      input.toDF().toDF("event_id", "envelope"), store, ckDir)
+    try {
+      input.addData(
+        envelope(1, "fsA", "a.json", "BlobCreated", "2024-01-01T00:00:01Z"),
+        envelope(2, "fsA", "b.json", "BlobCreated", "2024-01-01T00:00:02Z"),
+        envelope(3, "fsA", "c.json", "BlobCreated", "2024-01-01T00:00:03Z"))
+      query.processAllAvailable()
+      val v0 = store.currentVersion.get
+      input.addData(
+        envelope(4, "fsA", "a.json", "BlobCreated", "2024-01-01T01:00:00Z"),
+        envelope(5, "fsA", "b.json", "BlobDeleted", "2024-01-01T01:00:01Z"),
+        envelope(6, "fsA", "d.json", "BlobCreated", "2024-01-01T01:00:02Z"),
+        envelope(7, "fsA", "zz.json", "BlobDeleted", "2024-01-01T01:00:03Z"))
+      query.processAllAvailable()
+      assert(store.currentVersion.contains(v0 + 1))
+      val eTags = store.read().get.collect().map(_.getAs[String]("eTag")).sorted
+      assert(eTags.sameElements(Array("etag3", "etag4", "etag6")))
+    } finally query.stop()
+  }
+
+  test("dead-letter-only and tombstone-only micro-batches leave an empty store usable") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    for (part <- Seq(None, Some("filesystem"))) {
+      val ckDir = Files.createTempDirectory("graft_env2_ck").toString
+      val idxDir = Files.createTempDirectory("graft_env2_idx").toString
+      def open() = new IndexStore(spark, idxDir, "key", partitionCol = part)
+      val store = open()
+      val metrics = new graft.streaming.IndexerStreamMetrics
+      val input = MemoryStream[(Long, String)]
+      val query = graft.streaming.StreamingOps.indexBlobEventStream(
+        input.toDF().toDF("event_id", "envelope"), store, ckDir, Some(metrics))
+      try {
+        input.addData(98L -> "{not an envelope", 99L -> "not json either")
+        query.processAllAvailable()
+        assert(metrics.deadLetters == 2L, s"partition=$part")
+        assert(open().read().forall(_.count() == 0), s"partition=$part")
+
+        input.addData(envelope(1, "fsA", "a.json", "BlobDeleted", "2024-01-01T00:00:01Z"))
+        query.processAllAvailable()
+        assert(open().read().forall(_.count() == 0), s"partition=$part")
+
+        input.addData(envelope(2, "fsA", "a.json", "BlobCreated", "2024-01-01T00:00:02Z"))
+        query.processAllAvailable()
+        assert(open().read().get.collect().map(_.getAs[String]("eTag")).sameElements(Array("etag2")),
+          s"partition=$part")
+        assert(metrics.deadLetters == 2L, s"partition=$part")
+      } finally query.stop()
+    }
+  }
 }

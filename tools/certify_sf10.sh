@@ -27,27 +27,32 @@ TAG=${1:-r14}
 SHARDS=${SHARDS:-6}
 SF1=/tmp/graft_sf1
 SF10=/tmp/graft_sf10
+SF01=$(dirname "$PWD")/testdata/sf0.1   # the sf0.1 lake GenData replicates, beside the checkout
 
+# The progress greps keep GenData's own lines and errors in both forms:
+# sbt's "[error]" tag and the bare ERROR/Exception lines a forked run's
+# stderr carries under build.sbt's StdoutOutput.
 # NB: Spark writes lineitem.parquet as a DIRECTORY; the _SUCCESS marker
 # inside it is the only reliable completion signal
 if [ ! -e $SF1/lineitem.parquet/_SUCCESS ]; then
   echo "== gen sf1 ($(date -u +%H:%M:%S)) =="
-  sbt -batch "runMain graft.GenData /root/testdata/sf0.1 $SF1 10 const" 2>&1 | grep -E "gendata|error\]" | grep -v "INFO\|WARN" | tail -15
+  sbt -batch "runMain graft.GenData $SF01 $SF1 10 const" 2>&1 | grep -E "gendata|error\]|ERROR|Exception" | grep -v "INFO\|WARN" | tail -15
 fi
 if [ ! -e $SF10/lineitem.parquet/_SUCCESS ]; then
   echo "== gen sf10 ($(date -u +%H:%M:%S)) =="
-  sbt -batch "runMain graft.GenData /root/testdata/sf0.1 $SF10 100 const" 2>&1 | grep -E "gendata|error\]" | grep -v "INFO\|WARN" | tail -15
+  sbt -batch "runMain graft.GenData $SF01 $SF10 100 const" 2>&1 | grep -E "gendata|error\]|ERROR|Exception" | grep -v "INFO\|WARN" | tail -15
 fi
 
 echo "== shard plan + band export ($(date -u +%H:%M:%S)) =="
-# sbt prefixes every stdout line with "[info] " — strip it and keep
-# only key<TAB>band rows (drops sbt's own chatter lines). Export to a
-# temp file FIRST and only replace the tracked tools/bands.tsv after
+# Keep only key<TAB>band rows (drops sbt's own chatter lines), with or
+# without sbt's "[info] " prefix: forked runs print to stdout untouched
+# (build.sbt's StdoutOutput), older sbt settings prefix every line.
+# Export to a temp file FIRST and only replace the tracked tools/bands.tsv after
 # the key-count sanity check passes (round-15 advice: the old in-place
 # redirect clobbered the committed band table with a truncated file
 # whenever the sbt run was garbled, even though the script then aborted).
 sbt -batch "runMain graft.ListKeys bands" 2>&1 \
-  | sed -n $'s/^\[info\] \([a-z][a-z0-9_]*\t[a-z]*\)$/\\1/p' > /tmp/graft_bands.tsv
+  | sed -nE $'s/^(\\[info\\] )?([a-z][a-z0-9_]*\t[a-z]*)$/\\2/p' > /tmp/graft_bands.tsv
 cut -f1 /tmp/graft_bands.tsv > /tmp/graft_keys.txt
 N=$(wc -l < /tmp/graft_keys.txt)
 echo "$N keys across $SHARDS shards (bands -> tools/bands.tsv)"
