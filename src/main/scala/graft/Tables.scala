@@ -85,11 +85,13 @@ object Tables {
     * this is a no-op) so CPU-bound per-row kernels engage every core.
     * Hash-partitioning on the group key keeps a downstream per-key
     * aggregation exchange-free, so when the redistribute fires it
-    * replaces (not adds to) that shuffle.
+    * replaces (not adds to) that shuffle. The split count is read off
+    * the physical plan's RDD: `df.rdd` would post a listener action
+    * (and plan a row deserializer) for a job that never runs.
     */
   def parallelized(spark: SparkSession, df: DataFrame, key: String): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < cores) df.repartition(cores, col(key)) else df
+    if (df.queryExecution.toRdd.getNumPartitions < cores) df.repartition(cores, col(key)) else df
   }
 }
 

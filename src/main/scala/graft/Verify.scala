@@ -2,16 +2,21 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (tools/check.py). Exits non-zero
+  * when any selected key fails. */
 object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       s"usage: Verify <sfDir> <outDir> [names,comma,separated] (got ${args.mkString(" ")})")
     val sfDir = args(0)
     val outDir = args(1)
-    // optional subset for local iteration; the driver always runs all
+    // optional subset for local iteration; without it every key runs.
+    // A misspelt name would select nothing and leave an empty oracle
+    // that compares clean, so unknown names are rejected up front.
     val only: Option[Set[String]] =
       if (args.length >= 3) Some(args(2).split(",").toSet) else None
+    val unknown = only.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
+    require(unknown.isEmpty, s"unknown query keys: ${unknown.toSeq.sorted.mkString(", ")}")
     def selected(name: String): Boolean = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the engine's standard tuning (AQE, 64MB broadcast threshold,
@@ -20,15 +25,20 @@ object Verify {
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+    // each key's earlier output is deleted before it is computed, so a
+    // key that fails leaves no stale answer for the compare to pass on
+    val failed = SparkEntry.queries.toSeq.filter { case (name, _) => selected(name) }
+      .flatMap { case (name, fn) =>
+        val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+        out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+        try {
+          fn(spark, sfDir).coalesce(1).write.parquet(out.toString)
+          None
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
         }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -46,5 +56,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} key(s) failed: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

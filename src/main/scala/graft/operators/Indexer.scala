@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.ODataFilter
 import graft.model.RunMetrics
 import graft.sources.IndexStore
 import org.apache.spark.sql.{Column, SparkSession}
@@ -71,6 +72,21 @@ object Indexer {
 
   /** One incremental run against the synthetic change-log + documents.
     *
+    * The run shuffles and joins its delta once: the watermark-filtered
+    * log is deduplicated to each key's latest event (deletes kept),
+    * left-joined to the documents, and persisted. Two actions read that
+    * frame. The first is one aggregate: the new watermark (`max(ts_ns)`;
+    * each key's winner carries that key's largest `ts_ns`, so this is
+    * the max over the whole log), the live-key count and the
+    * read-failed and too-large counts. The second is the merge of the
+    * uploadable rows, whose write job observes the created, modified
+    * and failed counts. A null watermark means no event since the last
+    * run: the run is a complete no-op — no merge, no new store version,
+    * the watermark stays. The merge is a separate action so that an idle
+    * run commits nothing. The watermark is written only after the merge
+    * commits, and the persisted frame is released whether or not the run
+    * succeeds.
+    *
     * @param odataFilter optional OData partition filter applied to the
     *   change-log BEFORE the watermark cutoff — the reference's
     *   scheduled runs each pass one
@@ -84,51 +100,44 @@ object Indexer {
   def runIncremental(spark: SparkSession, dir: String, store: IndexStore, stateDir: String,
                      odataFilter: Option[String] = None,
                      uploadReject: Option[Column] = None): IncrementalResult = {
-    val since = readWatermark(stateDir, spark.sparkContext.hadoopConfiguration)
-    val partitioned = odataFilter.fold(PathIndexOps.changeLog(spark, dir))(f =>
-      PathIndexOps.changeLog(spark, dir)
-        .filter(graft.functions.ODataFilter.compile(f, searchField = "pathUrlEncoded")))
-    val log = partitioned.filter(Tables.tsAfterNs(since)).persist()
-
-    val maxNsRow = log.agg(max(col("ts_ns"))).collect().head
-    if (maxNsRow.isNullAt(0)) {
-      log.unpersist()
-      return IncrementalResult(RunMetrics(0, 0, 0, 0, 0, 0, 0), since)
-    }
-    val newWatermark = maxNsRow.getLong(0)
-
+    val conf = spark.sparkContext.hadoopConfiguration
+    val since = readWatermark(stateDir, conf)
+    val log = odataFilter.foldLeft(PathIndexOps.changeLog(spark, dir))((l, f) =>
+      l.filter(ODataFilter.compile(f, searchField = "pathUrlEncoded")))
+      .filter(Tables.tsAfterNs(since))
+    // documents.doc_id is unique, so the left join keeps one row per key
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"), col("n_chars"))
     val delta = PathIndexOps.upsertState(log)
-      .filter(!col("is_delete"))
-      .withColumn("doc_id", col("event_id") % 500)
-      .select(col("key"), col("doc_id"), col("filesystem"))
-
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("n_chars"))
-    val readable = docs.filter(col("n_chars") >= 60L)
-    val readFailed = delta.join(docs.filter(col("n_chars") < 60L), Seq("doc_id")).count()
-
-    val mapped = delta.join(readable, Seq("doc_id"))
-      .select(col("key"), col("doc_id"), col("filesystem"),
-        substring(col("text"), 1, 100).as("stringvalue"),
-        col("n_chars").as("numbervalue"),
-        md5(col("text").cast("binary")).as("eTag"))
-    val tooLarge = mapped.filter(col("numbervalue") > 512L).count()
-    val uploadable = mapped.filter(col("numbervalue") <= 512L)
-
-    val readTotal = delta.count() // while the log is still cached
-    val merge = store.mergeOrUpload(uploadable, reject = uploadReject)
-    log.unpersist()
-
-    val metrics = RunMetrics(
-      readCount = readTotal - readFailed,
-      readFailedCount = readFailed,
-      processedCount = merge.created + merge.modified,
-      uploadCreatedCount = merge.created,
-      uploadModifiedCount = merge.modified,
-      uploadFailedCount = merge.failed,
-      uploadFailedTooLargeCount = tooLarge)
-    writeWatermark(stateDir, newWatermark, spark.sparkContext.hadoopConfiguration)
-    IncrementalResult(metrics, newWatermark)
+      .select(col("key"), (col("event_id") % 500).as("doc_id"), col("filesystem"),
+        col("ts_ns"), col("is_delete"))
+      .join(docs, Seq("doc_id"), "left")
+      .persist()
+    try {
+      val live = !col("is_delete")
+      val n = col("n_chars")
+      val agg = delta.agg(max(col("ts_ns")), count_if(live),
+        count_if(live && IndexerOps.readFails(n)), count_if(live && IndexerOps.tooLarge(n))).head()
+      if (agg.isNullAt(0)) IncrementalResult(RunMetrics(0, 0, 0, 0, 0, 0, 0), since)
+      else {
+        val uploadable = delta.filter(live && IndexerOps.uploadable(n))
+          .select(col("key"), col("doc_id"), col("filesystem"),
+            substring(col("text"), 1, 100).as("stringvalue"),
+            n.as("numbervalue"),
+            md5(col("text").cast("binary")).as("eTag"))
+        val merge = store.mergeOrUpload(uploadable, reject = uploadReject)
+        val (watermark, readFailed) = (agg.getLong(0), agg.getLong(2))
+        val metrics = RunMetrics(
+          readCount = agg.getLong(1) - readFailed,
+          readFailedCount = readFailed,
+          processedCount = merge.created + merge.modified,
+          uploadCreatedCount = merge.created,
+          uploadModifiedCount = merge.modified,
+          uploadFailedCount = merge.failed,
+          uploadFailedTooLargeCount = agg.getLong(3))
+        writeWatermark(stateDir, watermark, conf)
+        IncrementalResult(metrics, watermark)
+      }
+    } finally delta.unpersist()
   }
 
   /** The reference's actual operating mode: N staggered scheduled

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QueryPack, Tables}
 import graft.functions.Keys
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Document-indexer pipeline, re-expressing DataLakeIndexer semantics.
@@ -32,12 +32,23 @@ object IndexerOps extends QueryPack {
   private val BatchDocCount = 100L
   private[graft] val MaxBatchBytes = 8192L
 
+  /** The read/upload rules over a document's size in chars: the read
+    * fails below `ReadFailBelow`, the upload fails above
+    * `TooLargeAbove`, and only a document between the two is uploaded.
+    * A null size (no backing document) satisfies none of the three.
+    * Every consumer — the query keys here and [[Indexer.runIncremental]]
+    * — classifies through these, so the rules live in one place.
+    */
+  def readFails(nChars: Column): Column = nChars < ReadFailBelow
+  def tooLarge(nChars: Column): Column = nChars > TooLargeAbove
+  def uploadable(nChars: Column): Column = nChars.between(ReadFailBelow, TooLargeAbove)
+
   /** documents mapped to the index model (IndexMapper.cs analog). */
   def mappedDocs(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.parallelized(spark, Tables.documents(spark, dir), "doc_id")
     val path = concat(lit("docs/"), col("lang"), lit("/"), col("doc_id").cast("string"), lit(".json"))
     val encoded = Keys.pathUrlEncode(path)
-    d.filter(col("n_chars") >= ReadFailBelow) // mapper returned null ⇒ skip
+    d.filter(!readFails(col("n_chars"))) // mapper returned null ⇒ skip
       .select(
         col("doc_id"),
         Keys.pathKey(col("source"), encoded).as("pathbase64"),
@@ -84,7 +95,7 @@ object IndexerOps extends QueryPack {
     */
   def batchAssign(spark: SparkSession, dir: String): DataFrame = {
     val docs = mappedDocs(spark, dir).withColumn("doc_bytes", uploadDocBytes)
-    val kept = docs.filter(col("numbervalue") <= TooLargeAbove)
+    val kept = docs.filter(!tooLarge(col("numbervalue")))
     // distributed global sequence (no single-task window) → count-capped runs
     val assigned = graft.functions.Ranks.globalRowNumber(kept, "pathbase64")
       .withColumn("cb", ((col("rn") - 1) / BatchDocCount).cast("long"))
@@ -110,20 +121,20 @@ object IndexerOps extends QueryPack {
     val batches = folded.groupBy(col("cb"), col("sub_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("doc_bytes")).as("total_bytes"))
       .select((col("cb") * 1000000L + col("sub_id")).as("batch_id"), col("n_docs"), col("total_bytes"))
-    val tooLarge = docs.filter(col("numbervalue") > TooLargeAbove)
+    val rejected = docs.filter(tooLarge(col("numbervalue")))
       .agg(count(lit(1)).as("n_docs"), sum(col("doc_bytes")).as("total_bytes"))
       .select(lit(-1L).as("batch_id"), col("n_docs"), col("total_bytes"))
-    batches.unionByName(tooLarge).filter(col("n_docs") > 0).orderBy(col("batch_id"))
+    batches.unionByName(rejected).filter(col("n_docs") > 0).orderBy(col("batch_id"))
   }
 
   /** IndexerRunMetrics analog over one full run. */
   def indexerMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    d.agg(
-      sum(when(col("n_chars") >= ReadFailBelow, 1L).otherwise(0L)).as("readCount"),
-      sum(when(col("n_chars") < ReadFailBelow, 1L).otherwise(0L)).as("readFailedCount"),
-      sum(when(col("n_chars") >= ReadFailBelow && col("n_chars") <= TooLargeAbove, 1L).otherwise(0L)).as("uploadCount"),
-      sum(when(col("n_chars") > TooLargeAbove, 1L).otherwise(0L)).as("uploadFailedTooLargeCount"))
+    val n = col("n_chars")
+    Tables.documents(spark, dir).agg(
+      count_if(!readFails(n)).as("readCount"),
+      count_if(readFails(n)).as("readFailedCount"),
+      count_if(uploadable(n)).as("uploadCount"),
+      count_if(tooLarge(n)).as("uploadFailedTooLargeCount"))
   }
 
   /** Flagship end-to-end incremental run: delta paths since cutoff →
@@ -140,11 +151,10 @@ object IndexerOps extends QueryPack {
       .select(col("key"), col("doc_id"), col("filesystem"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("fileLastModified"))
     val docs = Tables.documents(spark, dir)
-      .filter(col("n_chars") >= ReadFailBelow)
+      .filter(uploadable(col("n_chars")))
       .select(col("doc_id"), substring(col("text"), 1, 100).as("stringvalue"),
         col("n_chars").as("numbervalue"), md5(col("text").cast("binary")).as("eTag"))
     delta.join(docs, Seq("doc_id"))
-      .filter(col("numbervalue") <= TooLargeAbove)
       .select(col("key"), col("doc_id"), col("filesystem"), col("fileLastModified"),
         col("stringvalue"), col("numbervalue"), col("eTag"))
   }
@@ -158,15 +168,15 @@ object IndexerOps extends QueryPack {
     * prefix semantics, exactly the arithmetic `CASE p < 10 THEN p ELSE
     * p div 10` since the folder number is `event_id % 50`), the
     * watermark is max(ts) of the partition's post-cutoff log INCLUDING
-    * deletes (Indexer.runIncremental advances its watermark before the
-    * tombstone filter), and read/upload counts mirror runIncremental's
-    * join-to-documents classification (a delta row with no matching
-    * doc_id counts as READ — runIncremental's readCount is
-    * delta.count() − readFailed, which includes unmatched docs — but
-    * is never uploadable). Scale shape: groupBy on a
-    * 10-value key after the per-key upsert dedup — the dedup shuffle
-    * dominates and is the same one every upsert query pays; the run
-    * grid itself is constant-size.
+    * deletes (Indexer.runIncremental's watermark is the max over its
+    * log, deletes included), and read/upload counts mirror
+    * runIncremental's classification of its left join to the documents
+    * (a live key with no matching doc_id counts as READ —
+    * runIncremental's readCount is its live-key count minus readFailed
+    * — but is never uploadable). Scale shape: groupBy on a 10-value key
+    * after the per-key upsert dedup — the dedup shuffle dominates and
+    * is the same one every upsert query pays; the run grid itself is
+    * constant-size.
     */
   def indexerRunHistory(spark: SparkSession, dir: String): DataFrame = {
     val part = col("event_id") % 50
@@ -180,17 +190,14 @@ object IndexerOps extends QueryPack {
       .filter(!col("is_delete"))
       .withColumn("doc_id", col("event_id") % 500)
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
+    val n = col("n_chars")
     val m = delta.join(docs, Seq("doc_id"), "left")
       .groupBy(col("run_id"))
       .agg(
-        sum(when(col("n_chars").isNotNull && col("n_chars") < ReadFailBelow, 1L)
-          .otherwise(0L)).as("read_failed_count"),
-        sum(when(col("n_chars").isNotNull && col("n_chars") < ReadFailBelow, 0L)
-          .otherwise(1L)).as("read_count"),
-        sum(when(col("n_chars").isNotNull && col("n_chars") >= ReadFailBelow
-          && col("n_chars") <= TooLargeAbove, 1L).otherwise(0L)).as("upload_count"),
-        sum(when(col("n_chars").isNotNull && col("n_chars") > TooLargeAbove, 1L)
-          .otherwise(0L)).as("upload_failed_too_large_count"))
+        count_if(readFails(n)).as("read_failed_count"),
+        (count(lit(1)) - count_if(readFails(n))).as("read_count"),
+        count_if(uploadable(n)).as("upload_count"),
+        count_if(tooLarge(n)).as("upload_failed_too_large_count"))
     m.join(wm, Seq("run_id"))
       .select(col("run_id"),
         concat(lit("search.ismatch('data%2fpart_"), col("run_id").cast("string"),

@@ -118,4 +118,85 @@ class IndexerE2ESpec extends SparkSpec {
     assert(r.metrics.uploadFailedCount > 0)
     assert(store.read().get.filter(col("numbervalue") % 10 === 3).count() == 0)
   }
+
+  /** Runs `body` and returns its result with the number of Spark actions
+    * (QueryExecutionListener successes) it ran. */
+  private def countingActions[T](body: => T): (T, Int) = {
+    val executions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = executions.incrementAndGet()
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = executions.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = body
+      // listener events are posted asynchronously: settle before reading
+      Thread.sleep(1000)
+      (r, executions.get())
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a full run and a 5-day catch-up return the pinned sf0.001 RunMetrics") {
+    val store = new IndexStore(spark, Files.createTempDirectory("graft_pin_idx").toString,
+      "key", partitionCol = Some("filesystem"))
+    val stateDir = Files.createTempDirectory("graft_pin_state").toString
+    val r1 = Indexer.runIncremental(spark, sf, store, stateDir)
+    assert(r1.metrics == graft.model.RunMetrics(694, 12, 637, 637, 0, 0, 57))
+    assert(store.read().get.count() == 637)
+    Indexer.writeWatermark(stateDir, r1.newWatermarkNs - 5L * 24 * 3600 * 1000000000L, hconf)
+    val r2 = Indexer.runIncremental(spark, sf, store, stateDir)
+    assert(r2.metrics == graft.model.RunMetrics(116, 3, 105, 0, 105, 0, 11))
+    assert(r2.newWatermarkNs == r1.newWatermarkNs)
+    assert(Indexer.readWatermark(stateDir, hconf) == r1.newWatermarkNs)
+  }
+
+  test("a run is two actions, an idle rerun one action that commits no version") {
+    val store = new IndexStore(spark, Files.createTempDirectory("graft_budget_idx").toString, "key")
+    val stateDir = Files.createTempDirectory("graft_budget_state").toString
+    val (r1, actions1) = countingActions(Indexer.runIncremental(spark, sf, store, stateDir))
+    assert(r1.metrics.uploadCreatedCount > 0)
+    assert(actions1 == 2, s"a run with new events should be 2 actions, saw $actions1")
+    assert(store.currentVersion.contains(0L))
+
+    val (r2, actions2) = countingActions(Indexer.runIncremental(spark, sf, store, stateDir))
+    assert(r2.metrics == graft.model.RunMetrics(0, 0, 0, 0, 0, 0, 0))
+    assert(r2.newWatermarkNs == r1.newWatermarkNs)
+    assert(actions2 == 1, s"an idle rerun should be 1 action, saw $actions2")
+    assert(store.currentVersion.contains(0L)) // no new snapshot version
+  }
+
+  test("a log holding only deletes advances the watermark and uploads nothing") {
+    import org.apache.spark.sql.functions.{col, max}
+    val store = new IndexStore(spark, Files.createTempDirectory("graft_del_idx").toString, "key")
+    val stateDir = Files.createTempDirectory("graft_del_state").toString
+    val r = Indexer.runIncremental(spark, sf, store, stateDir,
+      odataFilter = Some("event_type eq 'error'"))
+    val maxDeleteNs = Tables.events(spark, sf).filter(col("event_type") === "error")
+      .agg(max(col("ts_ns"))).head().getLong(0)
+    assert(r.newWatermarkNs == maxDeleteNs)
+    assert(Indexer.readWatermark(stateDir, hconf) == maxDeleteNs)
+    assert(r.metrics == graft.model.RunMetrics(0, 0, 0, 0, 0, 0, 0))
+    assert(store.read().forall(_.isEmpty))
+  }
+
+  test("a run whose merge throws releases its persisted frame and commits nothing") {
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    val store = new IndexStore(spark, Files.createTempDirectory("graft_boom_idx").toString, "key")
+    val stateDir = Files.createTempDirectory("graft_boom_state").toString
+    val first = Indexer.runIncremental(spark, sf, store, stateDir)
+    Indexer.writeWatermark(stateDir, first.newWatermarkNs - 5L * 24 * 3600 * 1000000000L, hconf)
+    val wm = Indexer.readWatermark(stateDir, hconf)
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception] {
+      Indexer.runIncremental(spark, sf, store, stateDir,
+        uploadReject = Some(raise_error(lit("boom"))))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
+    assert(Indexer.readWatermark(stateDir, hconf) == wm)
+    assert(store.currentVersion.contains(0L))
+  }
 }

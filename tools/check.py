@@ -16,6 +16,8 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+if not oracle:
+    sys.exit(f"{outdir}/oracle_sql.json selects no keys: nothing to compare")
 
 def norm(v):
     if isinstance(v, float):
