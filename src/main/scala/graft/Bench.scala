@@ -1,13 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // the engine's standard tuning (GraftSession: AQE + skew join, 64MB
-    // broadcast threshold, extensions) — bench what a cluster would run
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // optional subset (comma-separated names) for extra scale points —
     // the driver's per-round run leaves this unset and benches all.
     // Keys run IN THE GIVEN CSV ORDER (r16): Scala Map iteration is
@@ -16,12 +10,12 @@ object Bench {
     // shard so their JVM-aging cost can't inflate unrelated keys, and
     // that only works if the order given is the order run. Unset ⇒ all
     // keys, name-sorted (deterministic for the driver gate).
-    val selected: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      sys.env.get("SPARK_GRAFT_ONLY") match {
-        case Some(csv) => csv.split(",").toSeq.distinct
-          .flatMap(k => SparkEntry.queries.get(k).map(k -> _))
-        case None => SparkEntry.queries.toSeq.sortBy(_._1)
-      }
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY").toSeq.flatMap(_.split(",")))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // the engine's standard tuning (GraftSession: AQE + skew join, 64MB
+    // broadcast threshold, extensions) — bench what a cluster would run
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     // Force FULL plan execution: materialize the query's own physical
     // plan and count its rows. A plain df.count() re-optimizes with the
     // count on top, and Catalyst then legally DELETES the work being

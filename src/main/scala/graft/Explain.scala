@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: dump formatted physical plans for the registered
   * queries (all, or the names passed as args) so scan pushdown,
   * broadcast choices and codegen spans can be inspected.
@@ -9,14 +7,12 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val selected = SparkEntry.select(args.toSeq)
     val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        println(s"\n========== $name ==========")
-        fn(spark, sfDir).explain("formatted")
-      }
+    selected.foreach { case (name, fn) =>
+      println(s"\n========== $name ==========")
+      fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -29,6 +29,18 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     packs.flatMap(_.queries).toMap
 
+  /** The queries named in `names`, in that order (every key, name-sorted,
+    * when `names` is empty). A misspelt name would silently drop its key
+    * from a run, so any unknown name exits 1 before a query runs. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val qs = queries
+    val unknown = names.filterNot(qs.contains).distinct
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown query keys: ${unknown.sorted.mkString(", ")}"); sys.exit(1)
+    }
+    if (names.isEmpty) qs.toSeq.sortBy(_._1) else names.distinct.map(k => k -> qs(k))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

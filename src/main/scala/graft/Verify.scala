@@ -10,14 +10,9 @@ object Verify {
       s"usage: Verify <sfDir> <outDir> [names,comma,separated] (got ${args.mkString(" ")})")
     val sfDir = args(0)
     val outDir = args(1)
-    // optional subset for local iteration; without it every key runs.
-    // A misspelt name would select nothing and leave an empty oracle
-    // that compares clean, so unknown names are rejected up front.
-    val only: Option[Set[String]] =
-      if (args.length >= 3) Some(args(2).split(",").toSet) else None
-    val unknown = only.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown query keys: ${unknown.toSeq.sorted.mkString(", ")}")
-    def selected(name: String): Boolean = only.forall(_.contains(name))
+    // optional subset for local iteration; without it every key runs
+    val selected = SparkEntry.select(if (args.length >= 3) args(2).split(",").toSeq else Nil)
+    val names = selected.map(_._1).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the engine's standard tuning (AQE, 64MB broadcast threshold,
     // extensions) — results must come from the same profile a cluster
@@ -27,18 +22,17 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // each key's earlier output is deleted before it is computed, so a
     // key that fails leaves no stale answer for the compare to pass on
-    val failed = SparkEntry.queries.toSeq.filter { case (name, _) => selected(name) }
-      .flatMap { case (name, fn) =>
-        val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
-        out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
-        try {
-          fn(spark, sfDir).coalesce(1).write.parquet(out.toString)
-          None
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          Some(name)
-        }
+    val failed = selected.flatMap { case (name, fn) =>
+      val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+      try {
+        fn(spark, sfDir).coalesce(1).write.parquet(out.toString)
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -52,7 +46,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected(k) }
+      .filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

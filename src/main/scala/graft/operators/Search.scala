@@ -209,17 +209,22 @@ object Search extends QueryPack {
 
   /** Client-side keyset pagination, the exact loop of the reference's
     * ListPathsAsync (PathIndexClient.cs:66-96): fetch an ordered page,
-    * remember the last key, next page filters `key gt last`. Unlike
-    * OFFSET paging, every page is an indexed-predicate scan — the
-    * filter pushes down, so page N never rescans pages 1..N-1's rows.
+    * remember the last key, next page filters `key gt last`. Each page
+    * is one job and one scan of `df`: the pages are disjoint and in key
+    * order, but `key gt last` prunes no file of a hash-distributed
+    * snapshot, so every page rescans what `df` selects. A page shorter
+    * than `pageSize` is the last; only a full last page costs one more
+    * job, the empty probe that ends the listing.
     */
   def pagedByKey(df: DataFrame, keyCol: String, pageSize: Int): Iterator[Seq[Row]] =
     new Iterator[Seq[Row]] {
       private var lastKey: Option[String] = None
+      private var done = false
       private var batch: Option[Seq[Row]] = None
-      private def fetch(): Seq[Row] = {
+      private def fetch(): Seq[Row] = if (done) Nil else {
         val page = lastKey.fold(df)(k => df.filter(col(keyCol) > k))
           .orderBy(col(keyCol)).limit(pageSize).collect().toSeq
+        done = page.size < pageSize
         if (page.nonEmpty) lastKey = Some(page.last.getAs[String](keyCol))
         page
       }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileContext, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,10 +30,14 @@ final case class MergeResult(created: Long, modified: Long, failed: Long, versio
   * holds the snapshot's schema, so readers never see an in-flight
   * snapshot, a read needs no footer-reading job, and a snapshot with
   * zero rows (a partitioned write of nothing leaves no data file) still
-  * reads back with its columns. Racing writers are not coordinated: two
-  * merges on the same base both write `v=N+1`, and one can replace the
-  * other. At cluster scale the merge shuffles snapshot and batch once,
-  * on the key.
+  * reads back with its columns. A committed `v=N` never changes until
+  * `compact` deletes it, so the store resolves the newest version once
+  * (analysis and file listing) and every later read or merge of it
+  * reuses that frame; an unchanged store's read costs only the marker
+  * glob. Racing writers are not coordinated: two merges on the same
+  * base both write `v=N+1`, and one can replace the other — breaking
+  * that invariant for the resolved frame too. At cluster scale the merge
+  * shuffles snapshot and batch once, on the key.
   *
   * Every write's counts are `observe(...)` aggregates of the write job
   * itself, taken by a listener on the written frame's own session (see
@@ -68,18 +72,19 @@ class IndexStore(spark: SparkSession, root: String, keyCol: String,
 
   def currentVersion: Option[Long] = versions.lastOption
 
-  /** Schema of the version this store last wrote or read. */
-  @volatile private var known: Option[(Long, StructType)] = None
+  /** The resolved snapshot of the version this store last wrote or read. */
+  @volatile private var resolved: Option[(Long, DataFrame)] = None
 
-  private def snapshot(v: Long): DataFrame = {
-    val schema = known.collect { case (`v`, s) => s }.getOrElse {
-      val in = hadoopFs.open(marker(v))
-      val s = try DataType.fromJson(new String(in.readAllBytes(), UTF_8)).asInstanceOf[StructType]
-        finally in.close()
-      known = Some(v -> s)
-      s
-    }
-    spark.read.schema(schema).parquet(dir(v))
+  private def resolve(v: Long, schema: StructType): DataFrame = {
+    val df = spark.read.schema(schema).parquet(dir(v))
+    resolved = Some(v -> df)
+    df
+  }
+
+  private def snapshot(v: Long): DataFrame = resolved.collect { case (`v`, df) => df }.getOrElse {
+    val in = hadoopFs.open(marker(v))
+    resolve(v, try DataType.fromJson(new String(in.readAllBytes(), UTF_8)).asInstanceOf[StructType]
+      finally in.close())
   }
 
   def read(): Option[DataFrame] = currentVersion.map(snapshot)
@@ -123,9 +128,14 @@ class IndexStore(spark: SparkSession, root: String, keyCol: String,
     } finally session.listenerManager.unregister(listener)
     val (part, data) = df.schema.fields.partition(f => partitionCol.contains(f.name))
     val schema = StructType(data ++ part)
-    val out = hadoopFs.create(marker(v), false)
+    // published by a rename that fails if the marker exists: a reader
+    // globbing a marker still being written would parse an empty file
+    val tmp = new Path(dir(v), "_graft_commit.tmp")
+    val out = hadoopFs.create(tmp, true)
     try out.write(schema.json.getBytes(UTF_8)) finally out.close()
-    known = Some(v -> schema)
+    FileContext.getFileContext(hadoopFs.getUri, spark.sparkContext.hadoopConfiguration)
+      .rename(tmp, marker(v))
+    resolve(v, schema)
     metrics
   }
 

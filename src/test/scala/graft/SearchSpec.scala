@@ -209,6 +209,24 @@ class SearchSpec extends SparkSpec {
     assert(keys.sameElements(keys.sorted))
   }
 
+  test("keyset pagination: one job per returned page, a probe only after a full last page") {
+    def listing(n: Int, keep: org.apache.spark.sql.Column = lit(true)): (Int, Int) = {
+      val df = spark.range(n).selectExpr("lpad(cast(id as string), 6, '0') as key").filter(keep)
+      var pages = Seq.empty[Seq[String]]
+      val jobs = jobsDuring {
+        pages = Search.pagedByKey(df, "key", pageSize = 100).map(_.map(_.getString(0))).toList
+      }
+      val fresh = df.orderBy("key").collect().map(_.getString(0)).grouped(100).map(_.toSeq).toSeq
+      assert(pages == fresh, s"$n keys")
+      (pages.length, jobs.length)
+    }
+    // a short last page ends the listing
+    assert(listing(250) == (3, 3))
+    // an exact multiple of the page size still probes once
+    assert(listing(300) == (3, 4))
+    assert(listing(300, col("key") > "999999") == (0, 1))
+  }
+
   test("analyzed multi-term ismatch: all terms must occur, analysis is shared") {
     import graft.functions.Analyzers
     val rows = Search.searchIsMatchTerms(spark, sf).collect()

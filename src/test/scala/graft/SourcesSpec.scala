@@ -214,30 +214,6 @@ class SourcesSpec extends SparkSpec {
     assert(rows.forall(r => r.getAs[Array[Byte]]("content").length == r.getAs[Long]("length")))
   }
 
-  /** Spark jobs started while `body` runs: a sentinel job marks the end,
-    * and listener events arrive in order, so every job `body` started
-    * has been seen once the sentinel has. */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("?"))
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription("graft-sentinel")
-      try spark.range(1).collect() finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains("graft-sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains("graft-sentinel"))
-      import scala.jdk.CollectionConverters._
-      seen.asScala.toSeq.filterNot(_ == "graft-sentinel")
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   private def keysOf(store: IndexStore): Seq[String] =
     store.read().toSeq.flatMap(_.select("key").collect().map(_.getString(0))).sorted
 
@@ -411,4 +387,58 @@ class SourcesSpec extends SparkSpec {
     assert(store2.read().get.schema == spark.read.parquet(s"$root2/v=$v").schema)
     assert(new IndexStore(spark, root2, "key").read().get.schema == spark.read.parquet(s"$root2/v=$v").schema)
   }
+
+  test("IndexStore memoizes the newest snapshot: repeat reads reuse it, writes and compact move it") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_idx_memo").toString
+    def open = new IndexStore(spark, root, "key", partitionCol = Some("fs"))
+    def rows(s: IndexStore): Seq[(String, Long)] =
+      s.read().get.collect().map(r => r.getAs[String]("key") -> r.getAs[Long]("n")).toSeq.sorted
+    val store = open
+    store.mergeOrUpload(Seq(("a", 1L, "x"), ("b", 2L, "y")).toDF("key", "n", "fs"))
+    // a second store on the root: its memo goes stale on every write
+    val reader = open
+    for (s <- Seq(store, reader)) {
+      var reads = Seq.empty[org.apache.spark.sql.DataFrame]
+      val jobs = jobsDuring { reads = Seq(s.read().get, s.read().get) }
+      assert(jobs.isEmpty, s"read() ran Spark jobs: $jobs")
+      assert(reads(0) eq reads(1), "the second read resolved the snapshot again")
+    }
+    def reads(want: (String, Long)*): Unit =
+      Seq(store, reader).foreach(s => assert(rows(s) == want))
+    reads("a" -> 1L, "b" -> 2L)
+
+    store.mergeOrUpload(Seq(("b", 20L, "y"), ("c", 3L, "x")).toDF("key", "n", "fs"))
+    reads("a" -> 1L, "b" -> 20L, "c" -> 3L)
+    assert(store.optimize() == 3 && store.currentVersion.contains(2L))
+    reads("a" -> 1L, "b" -> 20L, "c" -> 3L)
+    store.mergeOrUpload(Seq(("a", 0L, "x", true)).toDF("key", "n", "fs", "gone"), tombstone = Some("gone"))
+    reads("b" -> 20L, "c" -> 3L)
+
+    assert(store.compact(keepLast = 1) == 3)
+    reads("b" -> 20L, "c" -> 3L)
+    assert(rows(open) == Seq("b" -> 20L, "c" -> 3L))
+  }
+
+  test("IndexStore: a tight reader never opens a commit marker before its schema is in it") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_idx_marker").toString
+    val store = new IndexStore(spark, root, "key")
+    store.mergeOrUpload(Seq(("k0", 0L)).toDF("key", "n"))
+    // a second store on the root reads each new version's marker the
+    // moment its glob sees it
+    val reader = new IndexStore(spark, root, "key")
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicLong(0)
+    val poller = new Thread(() =>
+      try while (!stop.get()) { reader.read().get.schema; reads.incrementAndGet(); () }
+      catch { case t: Throwable => failure.set(t) })
+    poller.start()
+    try (1 to 20).foreach(i => store.mergeOrUpload(Seq((s"k$i", i.toLong)).toDF("key", "n")))
+    finally { stop.set(true); poller.join() }
+    assert(failure.get() == null, s"a read failed after ${reads.get()} reads: ${failure.get()}")
+    assert(reader.read().get.count() == 21)
+  }
 }
+

@@ -9,6 +9,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sf: String = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
 
+  /** Spark jobs started while `body` runs: a sentinel job marks the end,
+    * and listener events arrive in order, so every job `body` started
+    * has been seen once the sentinel has. */
+  def jobsDuring(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("?"))
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription("graft-sentinel")
+      try spark.range(1).collect() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("graft-sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains("graft-sentinel"))
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq.filterNot(_ == "graft-sentinel")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   override def afterAll(): Unit = {
     // shared across suites in one JVM: don't stop
     super.afterAll()
