@@ -112,12 +112,13 @@ object Bench {
     // one). It goes ONLY to the file; stdout gets exactly ONE compact
     // JSON line — total + environment + the 20 slowest queries under the
     // contract's "queries" key — short enough to always land whole.
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")), json + "\n")
-    catch { case _: Throwable => () }
+    // not caught: the stdout line below points readers at this file, so
+    // a run that cannot write it must fail
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
     val top = results.toSeq.sortBy(-_._2).take(20)
       .map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries":$top,"sf":"$sfDir","loadavg":$loadAvgs,"cpus":$cpus,"queries_full":"BENCH_LAST.json"}""")
+    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries":$top,"sf":"$sfDir","loadavg":$loadAvgs,"cpus":$cpus,"queries_full":"$out"}""")
     spark.stop()
   }
 }

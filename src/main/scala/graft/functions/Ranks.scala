@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import graft.sources.IndexCache.Pin
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Distributed global sequence numbers.
@@ -26,7 +27,7 @@ import org.apache.spark.sql.functions._
   * the range-partitioned frame is persisted so every consumer reads the
   * SAME materialized placement, the offsets join keeps the whole
   * computation in one action, and the result is eagerly materialized
-  * (localCheckpoint) before the scratch cache is released — callers can
+  * (pinned) before the scratch cache is released — callers can
   * re-execute the returned frame any number of times without ever
   * re-running the sampled partitioner.
   */
@@ -70,14 +71,25 @@ object Ranks {
     * rescale before calling.
     */
   def globalCumSum(df: DataFrame, orderCol: String, valueCol: String,
-      outCol: String = "cum", partitions: Int = 32): DataFrame = {
+      outCol: String = "cum", partitions: Int = 32): DataFrame =
+    globalPrefix(df, orderCol, outCol, partitions,
+      w => sum(col(valueCol)).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+      sum(col(valueCol)), lit(0.0))
+
+  def globalRowNumber(df: DataFrame, orderCol: String, outCol: String = "rn", partitions: Int = 32): DataFrame =
+    globalPrefix(df, orderCol, outCol, partitions,
+      w => row_number().over(w).cast("long"), count(lit(1)), lit(0L))
+
+  /** The shared three-step shape: `running` over each range partition in
+    * `orderCol` order, plus the offset of the preceding partitions'
+    * `subtotal`s (`zero` for the first). */
+  private def globalPrefix(df: DataFrame, orderCol: String, outCol: String, partitions: Int,
+      running: WindowSpec => Column, subtotal: Column, zero: Column): DataFrame = {
     val parted = df.repartitionByRange(partitions, col(orderCol)).persist()
     try {
       val local = parted
         .withColumn("_pid", spark_partition_id())
-        .withColumn("_lcs",
-          sum(col(valueCol)).over(Window.partitionBy(col("_pid")).orderBy(col(orderCol))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("_run", running(Window.partitionBy(col("_pid")).orderBy(col(orderCol))))
       // prefix sum of the ≤`partitions`-row subtotal frame WITHOUT a
       // window: _off(p) = Σ subtotals of partitions before p, as a
       // broadcast non-equi self-join (≤32×32 BroadcastNestedLoopJoin).
@@ -85,40 +97,19 @@ object Ranks {
       // optimizer-fragile — Catalyst folds the literal partition key
       // away, leaving the partitionless WindowExec the plan gate
       // (PlanAuditSpec) exists to forbid.
-      val subs = local.groupBy(col("_pid")).agg(sum(col(valueCol)).as("_s"))
+      val subs = local.groupBy(col("_pid")).agg(subtotal.as("_s"))
       val offsets = subs.as("a")
         .join(broadcast(subs.as("b")), col("b._pid") < col("a._pid"), "left_outer")
         .groupBy(col("a._pid").as("_pid"))
-        .agg(coalesce(sum(col("b._s")), lit(0.0)).as("_off"))
-      local.join(broadcast(offsets), Seq("_pid"))
-        .withColumn(outCol, col("_lcs") + col("_off"))
-        .drop("_pid", "_lcs", "_off")
-        .localCheckpoint(true)
-    } finally parted.unpersist()
-  }
-
-  def globalRowNumber(df: DataFrame, orderCol: String, outCol: String = "rn", partitions: Int = 32): DataFrame = {
-    val parted = df.repartitionByRange(partitions, col(orderCol)).persist()
-    try {
-      val local = parted
-        .withColumn("_pid", spark_partition_id())
-        .withColumn("_lrn",
-          row_number().over(Window.partitionBy(col("_pid")).orderBy(col(orderCol))))
-      // prefix-sum of partition counts: ≤`partitions` rows, computed as
-      // a broadcast non-equi self-join instead of a window (see
-      // globalCumSum for why the windowed formulation was dropped)
-      val counts = local.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
-      val offsets = counts.as("a")
-        .join(broadcast(counts.as("b")), col("b._pid") < col("a._pid"), "left_outer")
-        .groupBy(col("a._pid").as("_pid"))
-        .agg(coalesce(sum(col("b._cnt")), lit(0L)).as("_off"))
+        .agg(coalesce(sum(col("b._s")), zero).as("_off"))
       // one action: both the offsets agg and the join probe read the one
-      // persisted placement; localCheckpoint(eager) freezes the result so
-      // later actions replay blocks, not the sampled partitioner
+      // persisted placement; the pin (stable placement of the sampled
+      // range partition) freezes the result so later actions replay
+      // blocks, not the sampled partitioner, and frees `parted`
       local.join(broadcast(offsets), Seq("_pid"))
-        .withColumn(outCol, col("_lrn").cast("long") + col("_off"))
-        .drop("_pid", "_lrn", "_off")
-        .localCheckpoint(true)
+        .withColumn(outCol, col("_run") + col("_off"))
+        .drop("_pid", "_run", "_off")
+        .pin()
     } finally parted.unpersist()
   }
 }

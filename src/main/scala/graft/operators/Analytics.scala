@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
+import graft.sources.IndexCache.Pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -487,14 +488,13 @@ object Analytics extends QueryPack {
       .join(broadcast(Tables.region(spark, dir).filter(col("r_name") === "ASIA")),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("s_suppkey"))
-    // r16: `value` (a part-dimension-sized frame) feeds both the mean
-    // scalar and the final filter — checkpoint it so the corpus
-    // join+aggregate provably runs once instead of once per consumer.
+    // pinned: several consumers (the mean scalar and the final filter);
+    // exchange reuse alone measured slower at sf0.1 (1.31 s against 1.16 s)
     val value = Tables.lineitem(spark, dir)
       .join(asia, col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("l_partkey"))
       .agg(sum(col("l_extendedprice")).as("value"))
-      .localCheckpoint(true)
+      .pin()
     val mean = value.agg(avg(col("value")).as("mean_value"))
     value.crossJoin(broadcast(mean))
       .filter(col("value") > col("mean_value") * 1.5)
@@ -641,8 +641,8 @@ object Analytics extends QueryPack {
     * line (> 60 days after order date) on a finished order where NO
     * other supplier shipped late — a semi-join to find lateness plus a
     * self ANTI join for exclusivity, TPC-H's hardest join pattern. The
-    * (orderkey, suppkey) late set is tiny and feeds both sides of the
-    * anti join, so it is checkpointed once.
+    * (orderkey, suppkey) late set feeds both sides of the anti join;
+    * AQE exchange reuse computes it once.
     */
   def q21(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
@@ -652,7 +652,6 @@ object Analytics extends QueryPack {
       .join(o, col("l_orderkey") === col("o_orderkey"))
       .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
       .select(col("l_orderkey"), col("l_suppkey")).distinct()
-      .localCheckpoint(true)
     val others = late.select(col("l_orderkey").as("other_orderkey"), col("l_suppkey").as("other_supp"))
     val exclusive = late.join(others,
       col("l_orderkey") === col("other_orderkey") &&
@@ -878,20 +877,16 @@ object Analytics extends QueryPack {
     * the pair table the support floor already bounds.
     */
   def basketRules(spark: SparkSession, dir: String): DataFrame = {
-    // r16: all four legs derive from ONE per-order basket frame
-    // (basketFrame): per-part basket counts come off the exploded
-    // arrays, n_baskets is a plain row count (the r15 form paid a
-    // full countDistinct shuffle for it), pairs are the in-row a<b
-    // explode. localCheckpoint materializes the frame once for the
-    // consumers — without it each leg re-runs scan+collect_set (the
-    // r15 redistribute-per-leg finding, same failure shape).
-    // Note (r16 advice): basketFrame filters l_partkey.isNotNull, so
-    // an order whose lines ALL have null l_partkey is excluded from
-    // n_baskets here where the r15 countDistinct(l_orderkey) counted
-    // it. No such orders exist in this data (TPC-H partkeys are
-    // non-null); on data with nulls the rule denominators would drift
-    // by the all-null-order count.
-    val baskets = basketFrame(spark, dir).localCheckpoint(true)
+    // All legs derive from ONE per-order basket frame (basketFrame):
+    // per-part basket counts come off the exploded arrays, n_baskets
+    // is a plain row count, pairs are the in-row a<b explode. Pinned:
+    // three consumers, each of which would otherwise re-run
+    // scan+collect_set.
+    // basketFrame filters l_partkey.isNotNull, so an order whose lines
+    // ALL have null l_partkey is excluded from n_baskets. No such
+    // orders exist in TPC-H data; on data with nulls the rule
+    // denominators would drift by the all-null-order count.
+    val baskets = basketFrame(spark, dir).pin()
     val items = baskets.select(explode(col("parts")).as("l_partkey"))
       .groupBy(col("l_partkey")).agg(count(lit(1)).as("n_item"))
     val tot = baskets.select(count(lit(1)).as("n_baskets"))
@@ -1075,8 +1070,8 @@ object Analytics extends QueryPack {
     * GraphX shape) expressed in DataFrames: the edge table is built
     * once and persisted, each of the 3 power iterations is ONE
     * join + ONE map-side-combinable groupBy-sum, and the only moving
-    * frame is the (node, pr) table, localCheckpointed per round so
-    * lineage never compounds. Undirected edges mean no dangling mass.
+    * frame is the (node, pr) table, pinned per round so lineage never
+    * compounds. Undirected edges mean no dangling mass.
     * Ranks are reported mean-normalized (pr × N, ≈1.0 scale) so the
     * 4-digit rounding is far above fp summation noise. At 100 TB the
     * edge table shuffles once on src and that partitioning is reused
@@ -1099,15 +1094,14 @@ object Analytics extends QueryPack {
         .filter(col("c") >= 2)
       val e = pairs.select(col("pa").as("src"), col("pb").as("dst"))
         .union(pairs.select(col("pb").as("src"), col("pa").as("dst")))
-        .repartition(col("src")).localCheckpoint(true)
-      val d = e.groupBy(col("src")).agg(count(lit(1)).as("deg")).localCheckpoint(true)
-      val n = d.agg(count(lit(1)).cast("double").as("n")).localCheckpoint(true)
+        .repartition(col("src")).pin()
+      val d = e.groupBy(col("src")).agg(count(lit(1)).as("deg")).pin()
+      val n = d.agg(count(lit(1)).cast("double").as("n")).pin()
       (e, d, n)
     }
     val nodes = deg.select(col("src").as("node"))
     var pr = nodes.crossJoin(broadcast(nCnt))
       .select(col("node"), (lit(1.0) / col("n")).as("pr"))
-      .localCheckpoint(true)
     for (_ <- 1 to 3) {
       val contrib = edges
         .join(deg, Seq("src"))
@@ -1118,7 +1112,7 @@ object Analytics extends QueryPack {
         .crossJoin(broadcast(nCnt))
         .select(col("node"),
           (lit(0.15) / col("n") + lit(0.85) * coalesce(col("s"), lit(0.0))).as("pr"))
-        .localCheckpoint(true)
+        .pin() // lineage cut per iteration
     }
     pr.crossJoin(broadcast(nCnt))
       .select(col("node").as("p_partkey"),
@@ -1169,7 +1163,7 @@ object Analytics extends QueryPack {
       Tables.events(spark, dir).filter(Tables.tsBeforeNs(AggCutoffNs))
         .select(col("user_id"), col("event_id"), col("ts"), col("ts_ns"),
           col("event_type"), col("value"))
-        .localCheckpoint(true)
+        .pin()
     }
     val batch = Tables.events(spark, dir).filter(Tables.tsSinceNs(AggCutoffNs))
       .select(col("user_id"), col("event_id"), col("ts"), col("ts_ns"),
@@ -1394,7 +1388,7 @@ object Analytics extends QueryPack {
   /** Incremental AGGREGATE-STATE maintenance — the materialized-view
     * refresh every warehouse runs at 100 TB: the per-(event_type, day)
     * aggregate state over history (events before the cutoff) is built
-    * ONCE per snapshot and kept (IndexCache + eager checkpoint — on a
+    * ONCE per snapshot and kept (IndexCache + pin — on a
     * cluster, a written state table); a new batch (events since the
     * cutoff) is partial-aggregated ALONE and MERGED into the state by
     * key — counts add, sums add — so refresh cost is O(batch + |state|)
@@ -1413,7 +1407,7 @@ object Analytics extends QueryPack {
         sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents"))
     val state = graft.sources.IndexCache.getOrBuild(spark, "agg_state_typeday", dir) {
       partial(Tables.events(spark, dir).filter(Tables.tsBeforeNs(AggCutoffNs)))
-        .localCheckpoint(true)
+        .pin()
     }
     val batch = partial(Tables.events(spark, dir).filter(Tables.tsSinceNs(AggCutoffNs)))
     state.unionByName(batch)
@@ -1750,7 +1744,7 @@ object Analytics extends QueryPack {
         sum(floor(col("o_totalprice") * 100 + 0.5).cast("long")).as("cents"))
     val base = graft.sources.IndexCache.getOrBuild(spark, "mv_nation_rev", dir) {
       gamma(Tables.orders(spark, dir).filter(col("o_orderkey") % 10 =!= 0))
-        .localCheckpoint(true)
+        .pin()
     }
     val delta = gamma(Tables.orders(spark, dir).filter(col("o_orderkey") % 10 === 0))
     base.union(delta)

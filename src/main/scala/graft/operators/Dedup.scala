@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
+import graft.sources.IndexCache.Pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -70,7 +71,7 @@ object Dedup extends QueryPack {
     */
   def minhashIndex(spark: SparkSession, dir: String): DataFrame =
     graft.sources.IndexCache.getOrBuild(spark, "minhash_sketch", dir) {
-      minhashes(spark, dir).localCheckpoint(true)
+      minhashes(spark, dir).pin()
     }
 
   /** doc_id → (band, sig): LSH band signatures (md5 of each band's row
@@ -88,19 +89,13 @@ object Dedup extends QueryPack {
 
   /** Distinct candidate pairs (a < b) sharing an LSH band.
     *
-    * The band table feeds both sides of the self-join, so it is staged
-    * through an eager localCheckpoint first: the shingle→minhash
-    * pipeline provably runs ONCE, and both join sides replay the
-    * materialized blocks. (Round 2 relied on Catalyst's ReuseExchange
-    * deduping the identical subplans; reuse depends on plan
-    * canonicalization and silently regressed to computing the pipeline
-    * twice — a 9× slowdown at sf0.1. The checkpoint makes the
-    * single-computation guarantee structural, not best-effort.) The
-    * band table is 3 small rows per doc — orders of magnitude lighter
-    * than the shingle stream it truncates. localCheckpoint is
-    * executor-local storage: an executor loss mid-query recomputes
-    * nothing and fails the query — acceptable for a batch dedup pass,
-    * use a reliable checkpoint dir if fault-tolerance matters.
+    * The band table feeds both sides of the self-join, so it is the
+    * pinned [[bandIndex]]: the shingle→minhash pipeline provably runs
+    * ONCE, and both join sides replay the materialized blocks. Exchange
+    * reuse alone depends on plan canonicalization and once silently
+    * regressed to computing the pipeline twice (9× slower at sf0.1).
+    * The band table is 3 small rows per doc — orders of magnitude
+    * lighter than the shingle stream it truncates.
     */
   def candidatePairs(spark: SparkSession, dir: String): DataFrame = {
     val bands = bandIndex(spark, dir)
@@ -111,7 +106,7 @@ object Dedup extends QueryPack {
   }
 
   /** The corpus's LSH band index, built (shingle → minhash → band,
-    * eagerly checkpointed) ONCE per corpus snapshot and reused by every
+    * pinned) ONCE per corpus snapshot and reused by every
     * consumer — dedup_minhash_lsh, dedup_ngram_jaccard, dedup_clusters,
     * dedup_incremental all probe the same structure, the way a
     * persisted band index would be probed at 100 TB (the store-backed
@@ -119,15 +114,15 @@ object Dedup extends QueryPack {
     */
   def bandIndex(spark: SparkSession, dir: String): DataFrame =
     graft.sources.IndexCache.getOrBuild(spark, "lsh_bands", dir) {
-      lshBands(spark, dir).localCheckpoint(true)
+      lshBands(spark, dir).pin()
     }
 
-  /** Distinct (doc, shingle) pairs, checkpointed once per snapshot —
+  /** Distinct (doc, shingle) pairs, pinned once per snapshot —
     * the verify-stage sidecar of the band index.
     */
   def shingleIndex(spark: SparkSession, dir: String): DataFrame =
     graft.sources.IndexCache.getOrBuild(spark, "shingles_distinct", dir) {
-      shingled(spark, dir).distinct().localCheckpoint(true)
+      shingled(spark, dir).distinct().pin()
     }
 
   /** The LSH band index PERSISTED as a lake layout (round 10 — the
@@ -183,7 +178,7 @@ object Dedup extends QueryPack {
     val newBands = mh.select(col("doc_id"), explode(array(bandSigs: _*)).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
       .withColumn("key", concat(col("doc_id").cast("string"), lit(":"), col("band").cast("string")))
-      .localCheckpoint(true) // one shingle pass feeds both the join and the store merge
+      .pin() // one shingle pass feeds both the join and the store merge
 
     val existing = bandStore.read()
     val candidates = existing match {
@@ -196,7 +191,7 @@ object Dedup extends QueryPack {
           .filter(col("new_doc") =!= col("existing_doc"))
           .select(col("new_doc"), col("existing_doc")).distinct()
     }
-    val out = candidates.localCheckpoint(true) // materialize before the store advances
+    val out = candidates.pin() // materialize before the store advances
     bandStore.mergeOrUpload(newBands)
     out
   }
@@ -474,7 +469,7 @@ object Dedup extends QueryPack {
       shingleIndex(spark, dir)
         .groupBy(col("doc_id"))
         .agg(collect_set(xxhash64(col("sh"))).as("shs"))
-        .localCheckpoint(true)
+        .pin()
     }
 
   /** Embedding near-dup: cosine ≥ τ pairs, bucketed by k-means cells so
@@ -494,7 +489,7 @@ object Dedup extends QueryPack {
     * references the pair frame TWICE (the intersection join and the
     * final enrich), so the whole O(n·CellBound) pairwise stage executed
     * twice per query — the measured 95.6s sf10 constant the round-8
-    * verdict flagged. As a checkpointed index it is paid once per
+    * verdict flagged. As a pinned index it is paid once per
     * snapshot, like the LSH band table and the cluster labels.
     */
   private[graft] def embeddingNearPairs(spark: SparkSession, dir: String): DataFrame =
@@ -539,7 +534,7 @@ object Dedup extends QueryPack {
       .withColumn("cos", round(Vectors.dot(col("va"), col("vb")) / (col("na") * col("nb")), 4))
       .filter(col("cos") >= 0.3)
       .select(col("a"), col("b"), col("cos"))
-      .localCheckpoint(true)
+      .pin()
    }
 
   /** 64-bit SimHash as four 16-bit band columns (h0..h3): per band the
@@ -563,7 +558,7 @@ object Dedup extends QueryPack {
       }
       // signature table = one 4-long row per doc, built once per
       // snapshot (the SimHash fingerprint index), reused by every probe
-      summed.select(col("doc_id") +: hb: _*).localCheckpoint(true)
+      summed.select(col("doc_id") +: hb: _*).pin()
     }
 
   /** Near-dup pairs by 64-bit SimHash Hamming distance ≤ 3, found via
@@ -636,7 +631,7 @@ object Dedup extends QueryPack {
     * dedup pipeline computes components once, then every downstream
     * decision — keep/drop, reporting, scrubbing — reads them), so the
     * fixpoint runs once per snapshot through [[graft.sources
-    * .IndexCache]] and the checkpointed label table (one row per
+    * .IndexCache]] and the pinned label table (one row per
     * edge-touching doc — duplicate-population-sized, not corpus-sized)
     * serves every later query.
     */
@@ -656,35 +651,35 @@ object Dedup extends QueryPack {
     // unpersist must target the frame that actually owns the cache entry
     // (unpersist on a derived projection is a silent no-op).
     var cached = labels
-    var changed = 1L
-    var iters = 0
-    while (changed > 0 && iters < 50) {
-      val nbMin = edges
-        .join(labels.select(col("doc_id").as("b"), col("cluster_id").as("nb_label")), Seq("b"))
-        .groupBy(col("a")).agg(min(col("nb_label")).as("nb_min"))
-        .select(col("a").as("doc_id"), col("nb_min"))
-      val next = labels
-        .join(nbMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(coalesce(col("nb_min"), col("cluster_id")), col("cluster_id")).as("new_label"),
-          col("cluster_id").as("old_label"))
-        .persist()
-      changed = next.filter(col("new_label") =!= col("old_label")).count()
+    try {
+      var changed = 1L
+      var iters = 0
+      while (changed > 0 && iters < 50) {
+        val nbMin = edges
+          .join(labels.select(col("doc_id").as("b"), col("cluster_id").as("nb_label")), Seq("b"))
+          .groupBy(col("a")).agg(min(col("nb_label")).as("nb_min"))
+          .select(col("a").as("doc_id"), col("nb_min"))
+        val next = labels
+          .join(nbMin, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            least(coalesce(col("nb_min"), col("cluster_id")), col("cluster_id")).as("new_label"),
+            col("cluster_id").as("old_label"))
+          .persist()
+        val prev = cached
+        cached = next
+        try changed = next.filter(col("new_label") =!= col("old_label")).count()
+        finally prev.unpersist()
+        labels = next.select(col("doc_id"), col("new_label").as("cluster_id"))
+        iters += 1
+      }
+      // Pinned to cut the iterative lineage and release the scratch
+      // caches: the label table is tiny (one row per edge-touching doc).
+      labels.pin()
+    } finally {
       cached.unpersist()
-      cached = next
-      labels = next.select(col("doc_id"), col("new_label").as("cluster_id"))
-      iters += 1
+      edges.unpersist()
+      pairs.unpersist()
     }
-    if (sys.env.contains("GRAFT_DEBUG")) println(s"[dedup_clusters] converged in $iters rounds")
-    // Truncate the iterative lineage: the label table is tiny (one row
-    // per edge-touching doc), so checkpoint it locally and release every
-    // cached frame the loop accumulated — across a 69-query session the
-    // leaked blocks would otherwise evict useful cache.
-    val finalLabels = labels.localCheckpoint(true)
-    cached.unpersist()
-    edges.unpersist()
-    pairs.unpersist()
-    finalLabels
   }
 
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
@@ -767,7 +762,7 @@ object Dedup extends QueryPack {
           posexplode(slice(col("t"), lit(1), size(col("t")) - SubGram + 1)).as(Seq("pos0", "w0")))
         .select(col("doc_id"), col("pos0").cast("long").as("pos"),
           xxhash64(concat_ws(" ", slice(col("t"), col("pos0") + 1, lit(SubGram)))).as("g"))
-        .localCheckpoint(true)
+        .pin()
     }
 
   /** Pair-ready DOC-FIRST posting table for [[dedupSubstring]]: one row
@@ -777,7 +772,7 @@ object Dedup extends QueryPack {
     * groupBy+stats+join subtree TWICE per query execution (once per
     * self-join leg — Spark does not share identical subplans), which
     * the sf10 cert measured as the dominant cost of the key (59.2s).
-    * Cached, each leg replays checkpointed blocks.
+    * Cached, each leg replays pinned blocks.
     */
   private def substrKeptFirst(spark: SparkSession, dir: String): DataFrame =
     graft.sources.IndexCache.getOrBuild(spark, "substr_kept_first", dir) {
@@ -786,7 +781,7 @@ object Dedup extends QueryPack {
       val keep = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
         .filter(col("df") >= 2 && col("df") <= SubDfCap)
         .select(col("g"))
-      grams.join(keep, Seq("g")).localCheckpoint(true)
+      grams.join(keep, Seq("g")).pin()
     }
 
   def dedupSubstring(spark: SparkSession, dir: String): DataFrame = {
@@ -827,7 +822,7 @@ object Dedup extends QueryPack {
         .agg(countDistinct(col("doc_id")).as("df"), count(lit(1)).as("occ"))
         .filter(col("df") >= 2 && col("df") <= SubDfCap && col("occ") <= SubOccCap)
         .select(col("g"))
-      g0.join(keep, Seq("g")).localCheckpoint(true)
+      g0.join(keep, Seq("g")).pin()
     }
 
   def dedupSubstringSpans(spark: SparkSession, dir: String): DataFrame = {

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
-import graft.functions.Keys
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,17 +45,15 @@ object IndexerOps extends QueryPack {
   /** documents mapped to the index model (IndexMapper.cs analog). */
   def mappedDocs(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.parallelized(spark, Tables.documents(spark, dir), "doc_id")
-    val path = concat(lit("docs/"), col("lang"), lit("/"), col("doc_id").cast("string"), lit(".json"))
-    val encoded = Keys.pathUrlEncode(path)
     d.filter(!readFails(col("n_chars"))) // mapper returned null ⇒ skip
       .select(
         col("doc_id"),
-        Keys.pathKey(col("source"), encoded).as("pathbase64"),
+        PathIndexOps.docKey.as("pathbase64"),
         substring(col("text"), 1, 100).as("stringvalue"),
         col("n_chars").as("numbervalue"),
         (col("n_chars") > 300).as("booleanvalue"),
         md5(col("text").cast("binary")).as("eTag"),
-        encoded.as("pathUrlEncoded"))
+        PathIndexOps.docPathUrlEncoded.as("pathUrlEncoded"))
   }
 
   // (terminal-sort retirement, round 14: see PathIndexOps §2.A note —

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
+import graft.sources.IndexCache.Pin
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -343,14 +344,14 @@ object Multimodal extends QueryPack {
     * Output = (rep_a, rep_b, hamming 1..3, n_a, n_b): every doc-level
     * near-dup pair is recoverable as members(a) × members(b), and
     * hamming-0 duplicates are the n > 1 groups themselves. The group
-    * table builds once (localCheckpoint); both join sides replay it;
+    * table builds once (pinned); both join sides replay it;
     * verify is codegen'd bit_count(xor).
     */
   def mmPhashDedup(spark: SparkSession, dir: String): DataFrame = {
     val groups = phashBands(spark, dir)
       .groupBy((0 until 4).map(b => col(s"h$b")): _*)
       .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n"))
-      .localCheckpoint(true) // both join sides replay one decode+collapse
+      .pin() // both join sides replay one decode+collapse
     val banded = groups.select(col("rep") +: col("n") +: (0 until 4).map(b => col(s"h$b")) :+
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"), col(s"h$b").as("v"))): _*)).as("bs"): _*)

@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.{QueryPack, Tables}
 import graft.functions.Keys
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.IndexCache.Pin
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Path-index core, re-expressing PathIndexClient semantics on Spark.
@@ -39,23 +40,8 @@ object PathIndexOps extends QueryPack {
     java.time.Instant.parse("2024-01-20T00:00:00Z").getEpochSecond * 1000000000L
 
   /** events → blob-event change-log with derived path-model columns. */
-  def changeLog(spark: SparkSession, dir: String): DataFrame = {
-    // redistribute the single-split local file across cores before the
-    // per-row path/key fabrication (md5 + base64 per event) — no-op on
-    // a real lake scan; cutoff filters still push through the
-    // repartition to the parquet scan
-    val e = Tables.parallelized(spark, Tables.events(spark, dir), "event_id")
-    val fs = concat(lit("fs"), (col("user_id") % 4).cast("string"))
-    val path = concat(
-      lit("data/part_"), (col("event_id") % 50).cast("string"),
-      lit("/file_"), (col("event_id") % 500).cast("string"), lit(".json"))
-    val encoded = Keys.pathUrlEncode(path)
-    e.select(
-      col("event_id"), col("ts"), col("ts_ns"), col("event_type"), col("props"),
-      fs.as("filesystem"), path.as("path"), encoded.as("pathUrlEncoded"),
-      Keys.pathKey(fs, encoded).as("key"),
-      (col("event_type") === "error").as("is_delete"))
-  }
+  def changeLog(spark: SparkSession, dir: String): DataFrame =
+    blobLog(spark, dir, "", col("event_id") % 500, Seq(col("props")))
 
   /** KEY-GROWTH change-log variant: the file name embeds `user_id`
     * instead of a fixed `event_id % 500` modulus, so the distinct-key
@@ -70,19 +56,43 @@ object PathIndexOps extends QueryPack {
     * "the plan is key-parallel and scale-safe" claim into a
     * measurement.
     */
-  def changeLogGrown(spark: SparkSession, dir: String): DataFrame = {
+  def changeLogGrown(spark: SparkSession, dir: String): DataFrame =
+    blobLog(spark, dir, "u", col("user_id"), Nil)
+
+  /** The event path model: filesystem `fs<user_id % 4>`, path
+    * `data/part_<event_id % 50>/file_<fileTag><fileId>.json`, its url
+    * encoding and key, and the delete flag; `extra` columns ride along
+    * after the event columns.
+    */
+  private def blobLog(spark: SparkSession, dir: String, fileTag: String, fileId: Column,
+      extra: Seq[Column]): DataFrame = {
+    // redistribute the single-split local file across cores before the
+    // per-row path/key fabrication (md5 + base64 per event) — no-op on
+    // a real lake scan; cutoff filters still push through the
+    // repartition to the parquet scan
     val e = Tables.parallelized(spark, Tables.events(spark, dir), "event_id")
     val fs = concat(lit("fs"), (col("user_id") % 4).cast("string"))
     val path = concat(
       lit("data/part_"), (col("event_id") % 50).cast("string"),
-      lit("/file_u"), col("user_id").cast("string"), lit(".json"))
+      lit(s"/file_$fileTag"), fileId.cast("string"), lit(".json"))
     val encoded = Keys.pathUrlEncode(path)
     e.select(
-      col("event_id"), col("ts"), col("ts_ns"), col("event_type"),
-      fs.as("filesystem"), path.as("path"), encoded.as("pathUrlEncoded"),
-      Keys.pathKey(fs, encoded).as("key"),
-      (col("event_type") === "error").as("is_delete"))
+      Seq(col("event_id"), col("ts"), col("ts_ns"), col("event_type")) ++ extra ++ Seq(
+        fs.as("filesystem"), path.as("path"), encoded.as("pathUrlEncoded"),
+        Keys.pathKey(fs, encoded).as("key"),
+        (col("event_type") === "error").as("is_delete")): _*)
   }
+
+  /** The document path model: `docs/<lang>/<doc_id>.json`, url-encoded,
+    * keyed under the document's `source` as its filesystem. */
+  private[operators] val docPathUrlEncoded: Column = Keys.pathUrlEncode(
+    concat(lit("docs/"), col("lang"), lit("/"), col("doc_id").cast("string"), lit(".json")))
+  private[operators] val docKey: Column = Keys.pathKey(col("source"), docPathUrlEncoded)
+
+  /** (doc_id, filesystem, pathUrlEncoded, key) of each document row. */
+  private def docPaths(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), col("source").as("filesystem"),
+      docPathUrlEncoded.as("pathUrlEncoded"), docKey.as("key"))
 
   /** Latest record per key (merge-or-upload end state): window dedup —
     * one shuffle on the high-cardinality key, one per-partition sort.
@@ -117,8 +127,8 @@ object PathIndexOps extends QueryPack {
     * batch (`sb`), plus the total version count. Built ONCE per corpus
     * snapshot — one change-log scan (the md5+base64 key fabrication
     * paid once), one hash-agg shuffle with map-side combine — and
-    * staged through [[graft.sources.IndexCache]] (eager localCheckpoint,
-    * ~|keys| rows), exactly like the LSH band tables and IVF cells.
+    * staged through [[graft.sources.IndexCache]] (pinned, ~|keys|
+    * rows), exactly like the LSH band tables and IVF cells.
     *
     * This is the reference's own architecture: PathIndexClient.cs:25-62
     * MAINTAINS the index by merge-or-upload — it never re-derives index
@@ -149,7 +159,7 @@ object PathIndexOps extends QueryPack {
           max(when(col("ts_ns") < CutoffNs, v)).as("s1"),
           max(when(col("ts_ns") < DeltaCutoffNs, v)).as("s2"),
           max(when(col("ts_ns") >= CutoffNs, v)).as("sb"))
-        .localCheckpoint(true)
+        .pin()
     }
 
   // ---- §2.A queries ----
@@ -165,16 +175,8 @@ object PathIndexOps extends QueryPack {
   // A cluster user who wants ordered output adds `.orderBy` at the
   // call site and pays for exactly what they asked for.
 
-  def pathKeyQ(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.parallelized(spark, Tables.documents(spark, dir), "doc_id")
-    val path = concat(lit("docs/"), col("lang"), lit("/"), col("doc_id").cast("string"), lit(".json"))
-    val encoded = Keys.pathUrlEncode(path)
-    d.select(
-      col("doc_id"),
-      col("source").as("filesystem"),
-      encoded.as("pathUrlEncoded"),
-      Keys.pathKey(col("source"), encoded).as("key"))
-  }
+  def pathKeyQ(spark: SparkSession, dir: String): DataFrame =
+    docPaths(Tables.parallelized(spark, Tables.documents(spark, dir), "doc_id"))
 
   def upsertPaths(spark: SparkSession, dir: String): DataFrame =
     pathStates(spark, dir)
@@ -231,13 +233,8 @@ object PathIndexOps extends QueryPack {
       .limit(5000)
 
   def rebuildIndex(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.parallelized(spark, Tables.documents(spark, dir), "doc_id")
-      .filter(col("doc_id") % 17 =!= 0) // dirs skipped
-    val path = concat(lit("docs/"), col("lang"), lit("/"), col("doc_id").cast("string"), lit(".json"))
-    val encoded = Keys.pathUrlEncode(path)
-    val keyed = d.select(
-      col("doc_id"), col("source").as("filesystem"), encoded.as("pathUrlEncoded"),
-      Keys.pathKey(col("source"), encoded).as("key"))
+    val keyed = docPaths(Tables.parallelized(spark, Tables.documents(spark, dir), "doc_id")
+      .filter(col("doc_id") % 17 =!= 0)) // dirs skipped
     // distributed global sequence (no single-task window) → 1000-doc batches
     graft.functions.Ranks.globalRowNumber(keyed, "key")
       .withColumn("batch_id", ((col("rn") - 1) / 1000).cast("long"))

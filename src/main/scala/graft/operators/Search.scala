@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
-import graft.functions.{Keys, ODataFilter}
+import graft.functions.ODataFilter
 import graft.sources.TextIndex
+import graft.sources.IndexCache.Pin
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,10 +42,8 @@ object Search extends QueryPack {
 
   def searchOrderByPage(spark: SparkSession, dir: String): DataFrame = {
     // keyset page: key gt boundary, ordered, page-limited (page size 100)
-    val path = concat(lit("docs/"), col("lang"), lit("/"), col("doc_id").cast("string"), lit(".json"))
-    val enc = Keys.pathUrlEncode(path)
     index(spark, dir)
-      .select(col("doc_id"), Keys.pathKey(col("source"), enc).as("key"))
+      .select(col("doc_id"), PathIndexOps.docKey.as("key"))
       .filter(ODataFilter.compile("key gt 'c3JjMiV'"))
       .orderBy(col("key"))
       .limit(100)
@@ -404,7 +403,7 @@ object Search extends QueryPack {
     val basePostings = graft.sources.IndexCache.getOrBuild(spark, "text_postings_std_base", dir) {
       TextIndex.postingsStdOf(
         Tables.parallelized(spark, docs.filter(col("doc_id") % 10 =!= 0), "doc_id"))
-        .localCheckpoint(true)
+        .pin()
     }
     val merged = TextIndex.mergePostings(basePostings, docs.filter(col("doc_id") % 10 === 0))
     merged.filter(col("tok").startsWith("s"))
@@ -525,12 +524,12 @@ object Search extends QueryPack {
       field: String): (DataFrame, DataFrame, DataFrame) =
     graft.sources.IndexCache.getOrBuild(spark, s"mf_index_$field", dir) {
       val docs = Tables.parallelized(spark, mfField(spark, dir, field), "doc_id")
-      val p = TextIndex.postingsStdOf(docs).localCheckpoint(true)
+      val p = TextIndex.postingsStdOf(docs).pin()
       val lens = docs.select(col("doc_id"),
         size(graft.functions.Analyzers.standardTokens(col("text"))).cast("double").as("dl"))
-        .localCheckpoint(true)
+        .pin()
       val st = lens.agg(count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl"))
-        .localCheckpoint(true)
+        .pin()
       (p, lens, st)
     }
 

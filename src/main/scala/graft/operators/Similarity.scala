@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryPack, Tables}
 import graft.functions.Vectors
+import graft.sources.IndexCache.Pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -52,7 +53,7 @@ object Similarity extends QueryPack {
     * snapshot via [[graft.sources.IndexCache]] and reused by every
     * probing query (ann_ivf, knn_join, dedup_embedding) — the build is
     * deterministic (first-k seeds, fixed iteration count) and both
-    * frames are eagerly checkpointed by [[kmeans]], so the cache
+    * frames are pinned by [[kmeans]], so the cache
     * replays materialized blocks.
     */
   def cellIndex(spark: SparkSession, dir: String, probes: Int): (DataFrame, DataFrame) = {
@@ -170,13 +171,14 @@ object Similarity extends QueryPack {
       // standard pipeline order (exact dedup upstream of near-dup) at
       // 100 TB, where the groupBy is one content shuffle.
       val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+      // pinned: several consumers (the join below and every split round)
       val reps = e.groupBy(col("embedding")).agg(min(col("vec_id")).as("vec_id"))
-        .select(col("vec_id"), col("embedding")).localCheckpoint(true)
+        .select(col("vec_id"), col("embedding")).pin()
       var cur = cells0.select(col("vec_id"), col("cell"))
         .join(reps.select(col("vec_id")), Seq("vec_id"))
       var round = 0
       while (round < SplitRounds && maxCellPop(cur) > bound) {
-        cur = splitOversizedRound(cur, reps, bound).localCheckpoint(true)
+        cur = splitOversizedRound(cur, reps, bound).pin() // lineage cut per round
         round += 1
       }
       cur
@@ -343,14 +345,14 @@ object Similarity extends QueryPack {
         .groupBy(col("m"), col("cell"))
         .agg(array_sort(collect_list(struct(col("dim"), col("v")))).as("dv"))
         .select(col("m"), col("cell"), transform(col("dv"), s => s.getField("v")).as("centroid"))
-        .localCheckpoint(true)
+        .pin()
       // encode: nearest updated centroid per (vector, subspace)
       val codes = sub.join(broadcast(cents), Seq("m"))
         .withColumn("dd", pqD2(col("sv"), col("centroid")))
         .groupBy(col("vec_id"), col("m"))
         .agg(min(struct(col("dd"), col("cell"))).as("mc"))
         .select(col("vec_id"), col("m"), col("mc.cell").as("cell"))
-        .localCheckpoint(true)
+        .pin()
       (cents, codes)
     }
 
@@ -635,7 +637,7 @@ object Similarity extends QueryPack {
         val n = corpus.count()
         kmeansOn(corpus, k = cellCount(n), iters = 1, probes = 1)
       }
-    val newCells = assignToCells(batch, cents, probes = 1).localCheckpoint(true)
+    val newCells = assignToCells(batch, cents, probes = 1)
     val merged = corpusCells.select(col("vec_id"), col("cell"))
       .union(newCells.select(col("vec_id"), col("cell")))
     val q = queryVec(spark, dir)
@@ -787,9 +789,10 @@ object Similarity extends QueryPack {
       probes: Int, coarseProbes: Int = 2, k: Long = -1L): DataFrame = {
     val kk = if (k >= 0) k else centroids.count()
     val kc = math.max(2, math.ceil(math.sqrt(kk.toDouble)).toInt)
+    // pinned: several consumers (the fine→coarse map and the vector probe)
     val coarse = centroids.orderBy(col("cell")).limit(kc)
       .select(col("cell").as("ccell"), col("centroid").as("ccentroid"))
-      .localCheckpoint(true)
+      .pin()
     // fine centroid → coarse cell (exact nearest, k×√k)
     val fineToCoarse = centroids.crossJoin(broadcast(coarse))
       .withColumn("d2", Vectors.sqDist(col("centroid"), col("ccentroid")))
@@ -843,8 +846,8 @@ object Similarity extends QueryPack {
     try {
       // init: first k vectors (deterministic), read straight off the
       // persisted input. Each UPDATED centroid table is a tiny k×d
-      // frame, eagerly checkpointed so per-iteration lineage never
-      // compounds and the final plans don't re-run every Lloyd round.
+      // frame, pinned so per-iteration lineage never compounds and the
+      // final plans don't re-run every Lloyd round.
       var centroids = e.orderBy(col("vec_id")).limit(k)
         .select(col("vec_id").cast("int").as("cell"),
           transform(col("embedding"), x => x.cast("double")).as("centroid"))
@@ -856,13 +859,13 @@ object Similarity extends QueryPack {
           .groupBy(col("cell"))
           .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
           .select(col("cell"), transform(col("dm"), s => s.getField("m")).as("centroid"))
-          .localCheckpoint(true)
+          .pin()
       }
       val finalAssign = assignToCells(e, centroids, probes, k = k)
-        .localCheckpoint(true)
+        .pin()
       // with zero iterations the centroid frame is still lazy over the
       // about-to-be-released input — pin it so both outputs are safe
-      val outCentroids = if (iters == 0) centroids.localCheckpoint(true) else centroids
+      val outCentroids = if (iters == 0) centroids.pin() else centroids
       (finalAssign, outCentroids)
     } finally e.unpersist() // both outputs are materialized: safe to release
   }
@@ -1247,7 +1250,7 @@ object Similarity extends QueryPack {
     // every CTE MATERIALIZED: DuckDB inlines CTEs by default, and the
     // deflation chain references each stage several times — inlined,
     // the expansion is multiplicative per component (the same plan
-    // blowup the Scala side prevents with localCheckpoint)
+    // blowup the Scala side prevents by pinning)
     val comps = (1 to PcaK).map { c =>
       val steps = (1 to 3).map { s =>
         val prev = if (s == 1) "v0" else s"v${c}_${s - 1}"

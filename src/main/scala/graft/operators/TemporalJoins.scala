@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
+import graft.sources.IndexCache.Pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -115,9 +116,9 @@ object TemporalJoins extends QueryPack {
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy(col("user_id"), col("session_id"))
       .agg(min(col("ts_ns")).as("start_ns"), max(col("ts_ns")).as("end_ns"))
-      // sess feeds both probe legs; checkpoint so the corpus window
-      // pass provably runs once (the q11/basket pattern; guide §2.4).
-      .localCheckpoint(true)
+      // pinned: several consumers (both probe legs, and through them the
+      // counting windows and the bucket prefix) replay one window pass
+      .pin()
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("user_id"), lit(null).cast("long").as("session_id"),
         col("ts_ns").as("t"), lit(0).as("tag"))

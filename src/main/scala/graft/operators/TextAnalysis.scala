@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
+import graft.sources.IndexCache.Pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -189,15 +190,15 @@ object TextAnalysis extends QueryPack {
     * through [[graft.sources.IndexCache]] like every other derived
     * index — the tokenizer table of a production pipeline is built
     * once and probed by everything downstream (token counts, budget
-    * sampling), never re-folded per query. Eagerly checkpointed so
-    * cached probes replay materialized blocks.
+    * sampling), never re-folded per query. Pinned so cached probes
+    * replay materialized blocks.
     */
   private[graft] def bpeVocab(spark: SparkSession, dir: String): DataFrame =
     graft.sources.IndexCache.getOrBuild(spark, "bpe_vocab", dir) {
       Tables.documents(spark, dir)
         .select(explode(split(col("text"), " ")).as("w")).distinct()
         .withColumn("wtoks", bpeTokenCount(col("w")))
-        .localCheckpoint(true)
+        .pin()
     }
 
   def tokenCounts(spark: SparkSession, dir: String): DataFrame = {
@@ -470,18 +471,17 @@ object TextAnalysis extends QueryPack {
     //     frequency is provably ≤ total/HeadK (HeadK tokens each have
     //     count ≥ the rank-HeadK count) — a hard worst-key bound
     //     instead of a Zipf head.
-    // dt feeds both the frequency build and the scoring join, so it is
-    // staged through an eager localCheckpoint (single shuffle, both
-    // consumers replay materialized blocks).
+    // dt is pinned: several consumers (the frequency build and both
+    // scoring joins replay one shuffle).
     val HeadK = 1024
     val toks = Tables.parallelized(spark,
       Tables.documents(spark, dir).select(col("doc_id"), col("text")), "doc_id")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
     val dt = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("k"))
-      .localCheckpoint(true)
+      .pin()
     val freq = dt.groupBy(col("tok")).agg(sum(col("k")).as("c"))
     val total = freq.agg(sum(col("c")).as("n"))
-    val head = freq.orderBy(col("c").desc, col("tok")).limit(HeadK).localCheckpoint(true)
+    val head = freq.orderBy(col("c").desc, col("tok")).limit(HeadK).pin() // several consumers
     val tail = freq.join(broadcast(head.select(col("tok"))), Seq("tok"), "left_anti")
     val headScored = dt.join(broadcast(head), Seq("tok"))
     val tailScored = dt.join(broadcast(head.select(col("tok"))), Seq("tok"), "left_anti")
@@ -518,33 +518,26 @@ object TextAnalysis extends QueryPack {
         slice(col("t"), lit(2), size(col("t")) - 1),
         (a, b) => struct(a.as("a"), b.as("b")))).as("g"))
       .select(col("doc_id"), col("g.a").as("a"), col("g.b").as("b"))
-    // r16: dtb is NOT checkpointed — its only corpus-sized consumer is
-    // the final join, and the bigram-stat side (c_ab, c_a per distinct
-    // bigram) is far smaller than the occurrence stream, so that side
-    // ends up the broadcast build and the r15 shape's sort-merge join
-    // (a second corpus-sized exchange + sorts of dtb, plus an eager
-    // corpus-sized localCheckpoint materialization) disappears. bfreq
-    // and its downstream head/tail frames stay checkpointed — they are
-    // small and have three consumers each. dtb's two consumers (bfreq,
-    // final join) share the one (doc,a,b) shuffle via AQE stage reuse.
-    // r17 (r16 advice): the broadcast hint STAYS, with its assumption
-    // stated. Dropping it was measured: the static planner picks a
-    // sort-merge join (the checkpointed stat side has no size
-    // estimate), and even with AQE's runtime BHJ conversion the dtb
-    // occurrence stream pays an extra corpus exchange + sort — sf10
-    // solo converged 7.7 s (hinted) vs 33.0 s (unhinted), a 4×
-    // regression. ASSUMPTION the hint rests on: the distinct-bigram
-    // frame fits the broadcast limits. That is corpus-dependent
-    // (Heaps-style growth; a web-scale corpus can reach billions of
-    // bigrams and the 8 GB broadcast cap) — on such a corpus remove
-    // the hint and accept the shuffle join; here the frame is ~1k rows
-    // at every tested SF and the alternative is 4× slower.
+    // dtb is NOT pinned: its only corpus-sized consumer is the final
+    // join, where the bigram-stat side (c_ab, c_a per distinct bigram)
+    // is far smaller than the occurrence stream and is the broadcast
+    // build; dtb's two consumers (bfreq, final join) share the one
+    // (doc,a,b) shuffle via AQE stage reuse. bfreq and head are pinned:
+    // small, with several consumers each.
+    // The broadcast hint stays: unhinted, the static planner picks a
+    // sort-merge join (the pinned stat side has no size estimate), and
+    // even with AQE's runtime conversion the dtb occurrence stream pays
+    // an extra corpus exchange + sort — sf10 solo 7.7 s hinted vs 33.0 s
+    // unhinted. The hint assumes the distinct-bigram frame fits the
+    // broadcast limits: ~1k rows at every tested SF, but a web-scale
+    // corpus can reach billions of bigrams and the 8 GB broadcast cap —
+    // on such a corpus remove the hint and accept the shuffle join.
     val dtb = bigrams.groupBy(col("doc_id"), col("a"), col("b"))
       .agg(count(lit(1)).as("k"))
     val bfreq = dtb.groupBy(col("a"), col("b")).agg(sum(col("k")).as("c_ab"))
-      .localCheckpoint(true)
+      .pin()
     val pref = bfreq.groupBy(col("a")).agg(sum(col("c_ab")).as("c_a"))
-    val head = pref.orderBy(col("c_a").desc, col("a")).limit(HeadK).localCheckpoint(true)
+    val head = pref.orderBy(col("c_a").desc, col("a")).limit(HeadK).pin()
     val tail = pref.join(broadcast(head.select(col("a"))), Seq("a"), "left_anti")
     val enriched = bfreq.join(broadcast(head), Seq("a"))
       .unionByName(
@@ -648,13 +641,13 @@ object TextAnalysis extends QueryPack {
     val Budget = 2000L
     // budget REAL tokens: the per-doc BPE counts from [[tokenCounts]]
     // (embedded merge table), not whitespace words
-    // eager checkpoint: BOTH the bucket aggregate and the final filter
-    // consume this frame — without pinning, the quality + tokenization
+    // pinned: several consumers — BOTH the bucket aggregate and the
+    // final filter read this frame; unpinned, the quality + tokenization
     // DAG executes twice (measured 8.8s → ~half at sf1)
     val docs = quality(spark, dir).select(col("doc_id"), col("quality"))
       .join(tokenCounts(spark, dir).select(col("doc_id"), col("bpe_tokens").as("n_tokens")), Seq("doc_id"))
       .join(Tables.documents(spark, dir).select(col("doc_id"), col("lang")), Seq("doc_id"))
-      .localCheckpoint(true)
+      .pin()
     val buckets = docs.groupBy(col("lang"), col("quality"))
       .agg(sum(col("n_tokens")).as("btoks"))
     val w = Window.partitionBy(col("lang")).orderBy(col("quality").desc)
@@ -688,7 +681,7 @@ object TextAnalysis extends QueryPack {
     val dt = TextIndex.postingsWs(spark, dir)
     val dfreq = TextIndex.vocabWs(spark, dir).select(col("tok"), col("df"))
     val nDocs = TextIndex.docLensStd(spark, dir).agg(count(lit(1)).as("n_docs"))
-    val head = dfreq.orderBy(col("df").desc, col("tok")).limit(HeadK).localCheckpoint(true)
+    val head = dfreq.orderBy(col("df").desc, col("tok")).limit(HeadK).pin() // several consumers
     val tail = dfreq.join(broadcast(head.select(col("tok"))), Seq("tok"), "left_anti")
     val scored = dt.join(broadcast(head), Seq("tok"))
       .unionByName(
@@ -738,7 +731,7 @@ object TextAnalysis extends QueryPack {
       round(lit(1e-9) + max(col(c)), 4).as(s"${c}_max"),
       round(lit(1e-9) + avg(col(c)), 4).as(s"${c}_mean"),
       round(lit(1e-9) + stddev_samp(col(c)), 4).as(s"${c}_std")))
-    val one = l.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
+    val one = l.agg(aggs.head, aggs.tail: _*) // both consumers reuse its exchange
     val stackArgs = ProfiledCols.map(c =>
       s"'$c', ${c}_n, ${c}_nulls, ${c}_min, ${c}_max, ${c}_mean, ${c}_std")
       .mkString(", ")
@@ -1006,23 +999,19 @@ object TextAnalysis extends QueryPack {
   }
 
   def bpeTrainStep(spark: SparkSession, dir: String): DataFrame = {
-    // r17: the word-count frame is CHECKPOINTED before the fold. The
+    // The word-count frame is pinned as an optimizer barrier. The
     // `size(toks) >= 2` filter below is a function of the grouping key
-    // alone, so Catalyst's predicate pushdown moved it (fold inlined)
-    // BELOW this aggregate, onto the exploded token stream — the
-    // 40-rule fold ran once per token OCCURRENCE (27.5M evaluations at
-    // sf10, measured 25 s solo converged; the word-count pass alone is
-    // ~2 s) instead of once per distinct word. The checkpoint is the
-    // structural barrier that keeps the fold on the vocabulary side
-    // (Heaps-law bounded — the frame is the tokenize-the-vocab
-    // discipline's own working set), exactly the guide §4.4 failure
-    // mode with an expression in place of the UDF.
+    // alone, so without the pin predicate pushdown moves it (fold
+    // inlined) below this aggregate, onto the exploded token stream:
+    // the 40-rule fold then runs once per token occurrence instead of
+    // once per distinct word (sf10 solo 25 s, against ~2 s for the
+    // word-count pass alone).
     val dw = Tables.parallelized(spark,
       Tables.documents(spark, dir).select(col("doc_id"), col("text")), "doc_id")
       .select(explode(split(col("text"), " ")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("k"))
       .filter(length(col("w")) > 0)
-      .localCheckpoint(true)
+      .pin()
     val vocab = dw.withColumn("toks",
       split(bpeTokenFold(col("w"), BpeMerges.take(BpeTrainAt)), BpeD))
       .filter(size(col("toks")) >= 2)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.IndexCache.Pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -40,8 +41,8 @@ object DocumentSource {
   def jsonWithMetrics(spark: SparkSession, path: String, schema: StructType): (DataFrame, DataFrame) = {
     val df = json(spark, path, schema).cache()
     try {
-      (df.filter(col("_corrupt_record").isNull).drop("_corrupt_record").localCheckpoint(true),
-        df.filter(col("_corrupt_record").isNotNull).select(col("_corrupt_record")).localCheckpoint(true))
+      (df.filter(col("_corrupt_record").isNull).drop("_corrupt_record").pin(),
+        df.filter(col("_corrupt_record").isNotNull).select(col("_corrupt_record")).pin())
     } finally { df.unpersist(); () }
   }
 
@@ -109,11 +110,11 @@ object DocumentSource {
         .persist()
       // only directory NAMES come back; this action also materializes the
       // persisted level so files are never re-listed
-      val dirs = listed.filter(col("is_dir")).select(col("uri")).as[String].collect().toSeq
-      val files = listed.filter(!col("is_dir"))
-        .select(col("path"), col("length"), col("mtime_ms"))
-        .localCheckpoint(true) // level pinned on executors; release the scratch cache
-      listed.unpersist()
+      val (dirs, files) = try (
+        listed.filter(col("is_dir")).select(col("uri")).as[String].collect().toSeq,
+        listed.filter(!col("is_dir")).select(col("path"), col("length"), col("mtime_ms"))
+          .pin() // release the scratch cache
+      ) finally listed.unpersist()
       result = result.unionByName(files)
       frontier = dirs
       depth += 1

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped cache for DETERMINISTIC derived index structures —
   * LSH band tables, k-means cell assignments — built once per corpus
@@ -18,18 +18,47 @@ import org.apache.spark.sql.SparkSession
   *  - the built frame MUST be deterministic for (kind, dir) — the
   *    engine's index builders are (md5-derived hashes, first-k seeds,
   *    no RNG);
-  *  - the built frame MUST already be materialized (eager
-  *    localCheckpoint) so the cached value replays executor-local
-  *    blocks, never the build lineage;
+  *  - the built frame MUST already be pinned ([[Pin.pin]]: a reliable
+  *    checkpoint when the context has a checkpoint directory, else an
+  *    executor-local one on a local master) so the cached value replays
+  *    pinned blocks, never the build lineage;
   *  - `dir` must reference an immutable snapshot (the testdata
   *    contract; at cluster scale, a versioned IndexStore snapshot). A
   *    mutated corpus needs [[invalidate]] — or better, a new snapshot
   *    path.
   *
   * Keyed by applicationId so entries can never leak across
-  * SparkContexts (checkpointed blocks die with their executors).
+  * SparkContexts (local pins die with their executors).
   */
 object IndexCache {
+  /** `df.pin()`: materialize `df` now and cut its lineage, so every
+    * later plan over the result replays the stored blocks instead of
+    * re-running the build. The one pinning primitive of the engine;
+    * its branch follows what the SparkContext reports:
+    *  - a checkpoint directory is set: a reliable checkpoint (files that
+    *    survive the loss of an executor);
+    *  - none, on a local master: an executor-local checkpoint;
+    *  - none, on a cluster: fails, since local blocks die with their
+    *    executor and the query could not recompute them.
+    * Both branches are legal because what is pinned is deterministic:
+    * builders by the rule above, and `Ranks` over a persisted placement.
+    */
+  implicit final class Pin(private val df: DataFrame) extends AnyVal {
+    def pin(): DataFrame = {
+      val sc = df.sparkSession.sparkContext
+      if (reliablePin(sc.getCheckpointDir, sc.isLocal)) df.checkpoint(eager = true)
+      else df.localCheckpoint(eager = true)
+    }
+  }
+
+  /** True for a reliable pin, false for a local one; no pin on a
+    * cluster without a checkpoint directory. */
+  private[graft] def reliablePin(checkpointDir: Option[String], isLocal: Boolean): Boolean = {
+    require(checkpointDir.isDefined || isLocal, "pinning on a non-local master needs a " +
+      "reliable checkpoint directory: call SparkContext.setCheckpointDir first")
+    checkpointDir.isDefined
+  }
+
   /** Per-key build cell: the monitor same-key builds serialize on. */
   private final class Holder { @volatile var value: AnyRef = null }
 

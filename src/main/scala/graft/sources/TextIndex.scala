@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.Tables
 import graft.functions.Analyzers
+import graft.sources.IndexCache.Pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,8 +29,8 @@ import org.apache.spark.sql.functions._
   *    lowercase, split on non-alphanumerics): the token form of BM25
   *    and multi-term ismatch.
   *
-  * Index tables per snapshot (all deterministic, eagerly
-  * localCheckpointed via [[IndexCache]]):
+  * Index tables per snapshot (all deterministic, pinned via
+  * [[IndexCache]]):
   *  - postings: (tok, doc_id, tf) — one row per distinct (doc, token);
   *  - vocab:    (tok, df, occurrences) — the dictionary;
   *  - docLens (Std only): (doc_id, dl) for EVERY doc (token-less docs
@@ -79,27 +80,27 @@ object TextIndex {
   /** The snapshot's whitespace posting list (tok, doc_id, tf). */
   def postingsWs(spark: SparkSession, dir: String): DataFrame =
     IndexCache.getOrBuild(spark, "text_postings_ws", dir) {
-      postingsWsOf(parallelDocs(spark, dir)).localCheckpoint(true)
+      postingsWsOf(parallelDocs(spark, dir)).pin()
     }
 
   /** The snapshot's whitespace dictionary (tok, df, occurrences). */
   def vocabWs(spark: SparkSession, dir: String): DataFrame = {
     val p = postingsWs(spark, dir) // resolve before entering the cache slot (no reentrant computeIfAbsent)
     IndexCache.getOrBuild(spark, "text_vocab_ws", dir) {
-      vocabOf(p).localCheckpoint(true)
+      vocabOf(p).pin()
     }
   }
 
   /** The snapshot's standard-analyzer posting list (tok, doc_id, tf). */
   def postingsStd(spark: SparkSession, dir: String): DataFrame =
     IndexCache.getOrBuild(spark, "text_postings_std", dir) {
-      postingsStdOf(parallelDocs(spark, dir)).localCheckpoint(true)
+      postingsStdOf(parallelDocs(spark, dir)).pin()
     }
 
   /** The snapshot's positional posting list (tok, doc_id, pos). */
   def postingsPosStd(spark: SparkSession, dir: String): DataFrame =
     IndexCache.getOrBuild(spark, "text_postings_pos_std", dir) {
-      postingsPosStdOf(parallelDocs(spark, dir)).localCheckpoint(true)
+      postingsPosStdOf(parallelDocs(spark, dir)).pin()
     }
 
   /** The snapshot's postings PERSISTED to parquet, partitioned by the
@@ -198,7 +199,7 @@ object TextIndex {
   def vocabStd(spark: SparkSession, dir: String): DataFrame = {
     val p = postingsStd(spark, dir)
     IndexCache.getOrBuild(spark, "text_vocab_std", dir) {
-      vocabOf(p).localCheckpoint(true)
+      vocabOf(p).pin()
     }
   }
 
@@ -212,7 +213,7 @@ object TextIndex {
       Tables.documents(spark, dir)
         .select(col("doc_id"),
           size(Analyzers.standardTokens(col("text"))).cast("double").as("dl"))
-        .localCheckpoint(true)
+        .pin()
     }
 
   /** One-row corpus stats (n_docs, avgdl) for the standard analyzer. */
@@ -220,7 +221,7 @@ object TextIndex {
     val lens = docLensStd(spark, dir)
     IndexCache.getOrBuild(spark, "text_stats_std", dir) {
       lens.agg(count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl"))
-        .localCheckpoint(true)
+        .pin()
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{QueryPack, Tables}
+import graft.sources.IndexCache.Pin
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -632,7 +633,7 @@ object StreamingOps extends QueryPack {
         slice(Tables.tsSinceNs(c1) && Tables.tsBeforeNs(c2)),
         slice(Tables.tsSinceNs(c2)))
         .foreach(b => bitmapMergeBatch(store, b))
-      store.read().get.localCheckpoint(true)
+      store.read().get.pin()
     }
     table.groupBy(col("day"))
       .agg(sum(bit_count(col("word"))).as("n_users"))
