@@ -760,7 +760,7 @@ object Analytics extends QueryPack {
     * with a row_number over the same ordering. This is the compaction /
     * OPTIMIZE ZORDER job of a lakehouse writer, not a simulation: the
     * pruning the audits report is measurable on the files with
-    * input_file_name() (asserted in LayoutSpec).
+    * input_file_name() (asserted in AnalyticsSpec).
     */
   private[graft] def writtenLayouts(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     graft.sources.IndexCache.getOrBuild(spark, "written_layouts", dir) {
@@ -773,17 +773,10 @@ object Analytics extends QueryPack {
         graft.functions.Ranks.globalRowNumber(base.withColumn("_k", key), "_k")
           .withColumn("file_id", expr(s"CAST((rn - 1) DIV $rpf AS INT)"))
           .drop("_k", "rn")
-      val root = graft.sources.IndexCache.layoutRoot(spark, "graft_layout", dir)
-      def write(df: DataFrame, name: String): DataFrame = {
-        val out = s"$root/$name"
-        // hash-repartition on file_id so each file_id lands on exactly
-        // one task → exactly one physical parquet file per directory;
-        // sortWithinPartitions gives the row groups monotone stats
-        df.repartition(LayoutFiles, col("file_id"))
-          .sortWithinPartitions(col("file_id"), col("z"), col("l_orderkey"), col("l_linenumber"))
-          .write.mode("overwrite").partitionBy("file_id").parquet(out)
-        spark.read.parquet(out)
-      }
+      // one physical parquet file per file_id, row groups in (z, key) order
+      def write(df: DataFrame, name: String): DataFrame =
+        graft.sources.IndexCache.layout(spark, "graft_layout", dir, name, df,
+          Seq("file_id"), Seq("file_id", "z", "l_orderkey", "l_linenumber"))
       val nat = write(withFile(struct(col("l_orderkey"), col("l_linenumber"))), "natural")
       val zo = write(withFile(struct(col("z"), col("l_orderkey"), col("l_linenumber"))), "zorder")
       (nat, zo)
@@ -1252,23 +1245,12 @@ object Analytics extends QueryPack {
       val binned = graft.functions.Ranks.globalCumSum(frags, "_k", "n_rows")
         .withColumn("bin", ((col("cum") - col("n_rows")) / CompactRows).cast("long"))
         .select(col("event_type"), col("day"), col("bin"))
-      val root = graft.sources.IndexCache.layoutRoot(spark, "graft_compact", dir)
-      val fragged = {
-        val out = s"$root/fragmented"
-        // each (event_type, day) lands on exactly one task → exactly
-        // one physical file per leaf directory
-        ev.repartition(col("event_type"), col("day"))
-          .write.mode("overwrite").partitionBy("event_type", "day").parquet(out)
-        spark.read.schema(ev.schema).parquet(out)
-      }
-      val compacted = {
-        val out = s"$root/compacted"
-        val withBin = ev.join(broadcast(binned), Seq("event_type", "day"))
-        withBin.repartition(col("bin"))
-          .sortWithinPartitions(col("bin"), col("event_type"), col("day"), col("event_id"))
-          .write.mode("overwrite").partitionBy("bin").parquet(out)
-        spark.read.schema(withBin.schema).parquet(out)
-      }
+      // one physical file per (event_type, day) leaf directory
+      val fragged = graft.sources.IndexCache.layout(spark, "graft_compact", dir, "fragmented", ev,
+        Seq("event_type", "day"), Seq("event_type", "day"))
+      val compacted = graft.sources.IndexCache.layout(spark, "graft_compact", dir, "compacted",
+        ev.join(broadcast(binned), Seq("event_type", "day")),
+        Seq("bin"), Seq("bin", "event_type", "day", "event_id"))
       (fragged, compacted)
     }
 
@@ -1670,8 +1652,7 @@ object Analytics extends QueryPack {
     // the applicationId component makes the table name per-JVM: two
     // concurrent JVMs against the same snapshot share the warehouse
     // DIRECTORY, and without it the location-delete below would yank a
-    // sibling's table mid-build (same hazard class as the /tmp layout
-    // roots — see IndexCache.layoutRoot)
+    // sibling's table mid-build (as for IndexCache.scratchPath)
     val app = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
     val name = s"graft_bkt_${src}_${app}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     graft.sources.IndexCache.getOrBuild(spark, s"bucketed_$src", dir) {
@@ -1685,11 +1666,11 @@ object Analytics extends QueryPack {
       if (fs.exists(loc)) fs.delete(loc, true)
       graft.sources.Bucketing.saveBucketed(
         Tables.load(spark, dir, src).select(cols.map(col): _*), name, key, buckets = 16)
-      // same exit-time GC as the /tmp layout roots: the per-app table
-      // DIRECTORY would otherwise outlive the JVM (the in-memory
+      // deleted at exit like IndexCache.scratchDir roots: the per-app
+      // table DIRECTORY would otherwise outlive the JVM (the in-memory
       // catalog entry dies with it) and accumulate across sessions;
       // the defensive drop above still covers kill -9 leftovers
-      graft.sources.IndexCache.registerGcPath(loc.toUri.getPath)
+      fs.deleteOnExit(loc)
       spark.table(name)
     }
   }

@@ -125,9 +125,8 @@ object Dedup extends QueryPack {
       shingled(spark, dir).distinct().pin()
     }
 
-  /** The LSH band index PERSISTED as a lake layout (round 10 — the
-    * last derived index to get the disk-resident treatment the
-    * postings and IVF lists already have): partitioned by the
+  /** The LSH band index PERSISTED as a lake layout, like the postings
+    * and IVF lists: partitioned by the
     * signature's first hex char (`sig_prefix`, 16 directories), sorted
     * by (sig, band) within partitions so a signature probe prunes its
     * prefix directory at planning time AND pushes the sig equality to
@@ -137,12 +136,9 @@ object Dedup extends QueryPack {
   def bandLayout(spark: SparkSession, dir: String): DataFrame = {
     val built = bandIndex(spark, dir) // resolve outside the cache slot
     graft.sources.IndexCache.getOrBuild(spark, "lsh_bands_disk", dir) {
-      val out = s"${graft.sources.IndexCache.layoutRoot(spark, "graft_lshindex", dir)}/bands"
-      val data = built.withColumn("sig_prefix", substring(col("sig"), 1, 1))
-      data.repartition(col("sig_prefix"))
-        .sortWithinPartitions(col("sig_prefix"), col("sig"), col("band"))
-        .write.mode("overwrite").partitionBy("sig_prefix").parquet(out)
-      spark.read.schema(data.schema).parquet(out)
+      graft.sources.IndexCache.layout(spark, "graft_lshindex", dir, "bands",
+        built.withColumn("sig_prefix", substring(col("sig"), 1, 1)),
+        Seq("sig_prefix"), Seq("sig_prefix", "sig", "band"))
     }
   }
 

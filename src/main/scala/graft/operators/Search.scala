@@ -144,29 +144,53 @@ object Search extends QueryPack {
   def searchScoreBm25(spark: SparkSession, dir: String): DataFrame = {
     val terms = Seq("spark", "data")
     val p = TextIndex.postingsStd(spark, dir).filter(col("tok").isin(terms: _*))
-    // one row per doc holding each term's tf (0.0 when the doc lacks it)
-    val tfAggs = terms.map(t =>
-      coalesce(sum(when(col("tok") === t, col("tf"))), lit(0L)).cast("double").as(s"tf_$t"))
+    val lens = TextIndex.docLensStd(spark, dir)
+    // dictionary probe: df per query term
+    val dfs = termSums(terms, "df", col("df"))
+    val df = TextIndex.vocabStd(spark, dir).filter(col("tok").isin(terms: _*))
+      .agg(dfs.head, dfs.tail: _*)
+    bm25Top50(bm25(terms, p, lens, TextIndex.statsStd(spark, dir), df))
+  }
+
+  /** `<name>_<t>` per term t: `v` summed over the rows whose `tok` is
+    * t, as a double, 0.0 where there are none. */
+  private def termSums(terms: Seq[String], name: String, v: Column): Seq[Column] =
+    terms.map(t => coalesce(sum(when(col("tok") === t, v)), lit(0L)).cast("double").as(s"${name}_$t"))
+
+  /** The one-row df frame of probed postings `p`: postings hold one row
+    * per (tok, doc), so df_t is t's row count. */
+  private def postingsDf(terms: Seq[String], p: DataFrame): DataFrame = {
+    val dfs = termSums(terms, "df", lit(1L))
+    p.agg(dfs.head, dfs.tail: _*)
+  }
+
+  /** Unrounded BM25 of `terms` per document, (doc_id, s), over the
+    * terms' postings `p` (tok, doc_id, tf; one row per (tok, doc)), the
+    * doc lengths `lens` (doc_id, dl), the one-row corpus stats
+    * (n_docs, avgdl) and a one-row frame of each term's df (`df_<t>`).
+    * Docs without a posting among `p` are omitted: their score is 0.
+    * The df row and the stats are a one-row broadcast onto the postings.
+    */
+  private def bm25(terms: Seq[String], p: DataFrame, lens: DataFrame, corpus: DataFrame,
+      df: DataFrame): DataFrame = {
+    val tfAggs = termSums(terms, "tf", col("tf"))
     val perDoc = p.groupBy(col("doc_id")).agg(tfAggs.head, tfAggs.tail: _*)
-      .join(TextIndex.docLensStd(spark, dir), Seq("doc_id"))
-    // dictionary probe: df per query term, pivoted to one row beside
-    // the corpus scalars — a 1-row broadcast onto the postings
-    val dfAggs = terms.map(t =>
-      coalesce(sum(when(col("tok") === t, col("df"))), lit(0L)).cast("double").as(s"df_$t"))
-    val stats = TextIndex.vocabStd(spark, dir).filter(col("tok").isin(terms: _*))
-      .agg(dfAggs.head, dfAggs.tail: _*)
-      .crossJoin(TextIndex.statsStd(spark, dir))
+      .join(lens, Seq("doc_id"))
     val lenNorm = lit(Bm25K1) * (lit(1.0 - Bm25B) + lit(Bm25B) * col("dl") / col("avgdl"))
     val perTerm = terms.map { t =>
       val idf = log(lit(1.0) + (col("n_docs") - col(s"df_$t") + 0.5) / (col(s"df_$t") + 0.5))
       idf * col(s"tf_$t") * lit(Bm25K1 + 1.0) / (col(s"tf_$t") + lenNorm)
     }
-    perDoc.crossJoin(broadcast(stats))
-      .select(col("doc_id"), round(lit(1e-9) + perTerm.reduce(_ + _), 4).as("bm25"))
+    perDoc.crossJoin(broadcast(df.crossJoin(corpus)))
+      .select(col("doc_id"), perTerm.reduce(_ + _).as("s"))
+  }
+
+  /** The top 50 positive BM25 scores, rounded to 4 places. */
+  private def bm25Top50(scored: DataFrame): DataFrame =
+    scored.select(col("doc_id"), round(lit(1e-9) + col("s"), 4).as("bm25"))
       .filter(col("bm25") > 0)
       .orderBy(col("bm25").desc, col("doc_id"))
       .limit(50)
-  }
 
   /** HYBRID retrieval — the RAG-era query every search stack now runs:
     * the lexical BM25 leg ([[searchScoreBm25]], top-50) and the vector
@@ -477,25 +501,8 @@ object Search extends QueryPack {
     val prefixes = terms.map(TextIndex.prefixOf).distinct
     val p = TextIndex.postingsStdPersisted(spark, dir)
       .filter(col("tok_prefix").isin(prefixes: _*) && col("tok").isin(terms: _*))
-    val tfAggs = terms.map(t =>
-      coalesce(sum(when(col("tok") === t, col("tf"))), lit(0L)).cast("double").as(s"tf_$t"))
-    val perDoc = p.groupBy(col("doc_id")).agg(tfAggs.head, tfAggs.tail: _*)
-      .join(TextIndex.docLensStd(spark, dir), Seq("doc_id"))
-    // postings hold one row per (tok, doc), so df_t = that term's row count
-    val dfAggs = terms.map(t =>
-      coalesce(sum(when(col("tok") === t, lit(1L))), lit(0L)).cast("double").as(s"df_$t"))
-    val stats = p.agg(dfAggs.head, dfAggs.tail: _*)
-      .crossJoin(TextIndex.statsStd(spark, dir))
-    val lenNorm = lit(Bm25K1) * (lit(1.0 - Bm25B) + lit(Bm25B) * col("dl") / col("avgdl"))
-    val perTerm = terms.map { t =>
-      val idf = log(lit(1.0) + (col("n_docs") - col(s"df_$t") + 0.5) / (col(s"df_$t") + 0.5))
-      idf * col(s"tf_$t") * lit(Bm25K1 + 1.0) / (col(s"tf_$t") + lenNorm)
-    }
-    perDoc.crossJoin(broadcast(stats))
-      .select(col("doc_id"), round(lit(1e-9) + perTerm.reduce(_ + _), 4).as("bm25"))
-      .filter(col("bm25") > 0)
-      .orderBy(col("bm25").desc, col("doc_id"))
-      .limit(50)
+    bm25Top50(bm25(terms, p, TextIndex.docLensStd(spark, dir), TextIndex.statsStd(spark, dir),
+      postingsDf(terms, p)))
   }
 
   private val MfTitleLen = 10
@@ -540,22 +547,9 @@ object Search extends QueryPack {
     */
   private def mfFieldScore(spark: SparkSession, dir: String, field: String,
       terms: Seq[String]): DataFrame = {
-    val (p0, lens, stats0) = mfIndex(spark, dir, field)
+    val (p0, lens, stats) = mfIndex(spark, dir, field)
     val p = p0.filter(col("tok").isin(terms: _*))
-    val tfAggs = terms.map(t =>
-      coalesce(sum(when(col("tok") === t, col("tf"))), lit(0L)).cast("double").as(s"tf_$t"))
-    val perDoc = p.groupBy(col("doc_id")).agg(tfAggs.head, tfAggs.tail: _*)
-      .join(lens, Seq("doc_id"))
-    val dfAggs = terms.map(t =>
-      coalesce(sum(when(col("tok") === t, lit(1L))), lit(0L)).cast("double").as(s"df_$t"))
-    val stats = p.agg(dfAggs.head, dfAggs.tail: _*).crossJoin(stats0)
-    val lenNorm = lit(Bm25K1) * (lit(1.0 - Bm25B) + lit(Bm25B) * col("dl") / col("avgdl"))
-    val perTerm = terms.map { t =>
-      val idf = log(lit(1.0) + (col("n_docs") - col(s"df_$t") + 0.5) / (col(s"df_$t") + 0.5))
-      idf * col(s"tf_$t") * lit(Bm25K1 + 1.0) / (col(s"tf_$t") + lenNorm)
-    }
-    perDoc.crossJoin(broadcast(stats))
-      .select(col("doc_id"), perTerm.reduce(_ + _).as("s"))
+    bm25(terms, p, lens, stats, postingsDf(terms, p))
   }
 
   /** Multi-field weighted relevance — the Azure Search SCORING PROFILE

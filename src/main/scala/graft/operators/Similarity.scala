@@ -186,7 +186,7 @@ object Similarity extends QueryPack {
   }
 
   /** The WRITTEN cell-partitioned IVF lake layout — the CANONICAL probe
-    * storage for the whole ANN family (round 9), and the architecture
+    * storage for the whole ANN family, and the architecture
     * every disk-resident ANN service runs at 100 TB (FAISS/IVF on
     * object storage: vectors stored per inverted list, a query reads
     * ONLY its probed lists — the reference's own served-prebuilt-index
@@ -198,24 +198,18 @@ object Similarity extends QueryPack {
     * not an optimizer favor. `probes = 2` materializes the multi-probe
     * twin (one row per membership) that the k-NN join family reads.
     *
-    * Before round 9 only ann_ivf_persisted probed this layout; the
-    * in-memory twins filtered the FULL cached assignment frame per
-    * query — measured 0.8×/9.5× per decade vs the pruned layout's
-    * 1.4×/2.1× (BENCH_sf10_r08) — a per-query corpus scan at 100 TB.
+    * Probing a filtered in-memory assignment frame instead scans the
+    * whole frame per query: measured 0.8×/9.5× per scale decade vs the
+    * pruned layout's 1.4×/2.1×.
     */
   private[graft] def ivfLayout(spark: SparkSession, dir: String, probes: Int = 1): DataFrame = {
     val suffix = if (probes == 1) "cells" else s"cells_p$probes"
     graft.sources.IndexCache.getOrBuild(spark, s"ivf_cells_disk_p$probes", dir) {
       val (cells, _) = cellIndex(spark, dir, probes)
-      val out = s"${graft.sources.IndexCache.layoutRoot(spark, "graft_ivfindex", dir)}/$suffix"
       val data = cells.join(Tables.embeddings(spark, dir), Seq("vec_id"))
         .select(col("cell"), col("vec_id"), col("label"), col("embedding"))
-      data.repartition(col("cell"))
-        .sortWithinPartitions(col("cell"), col("vec_id"))
-        .write.mode("overwrite").partitionBy("cell").parquet(out)
-      // explicit schema: partition discovery can't infer from an
-      // empty write, and the read must not re-scan to infer types
-      spark.read.schema(data.schema).parquet(out)
+      graft.sources.IndexCache.layout(spark, "graft_ivfindex", dir, suffix, data,
+        Seq("cell"), Seq("cell", "vec_id"))
     }
   }
 

@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Session-scoped cache for DETERMINISTIC derived index structures —
   * LSH band tables, k-means cell assignments — built once per corpus
@@ -29,6 +31,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Keyed by applicationId so entries can never leak across
   * SparkContexts (local pins die with their executors).
+  *
+  * Derived on-disk indexes (IVF cell lists, LSH bands, prefix- and
+  * length-partitioned postings and vocabulary, the Z-order and
+  * compaction copies) are written by [[layout]], and scratch stores
+  * such as the bitmap store's IndexStore live in a [[scratchDir]]. Both
+  * place their files by the pin decision: under the checkpoint
+  * directory when one is set, under `/tmp` on a local master without
+  * one, nowhere on a cluster without one. Each per-app root is deleted
+  * by its Hadoop FileSystem's `deleteOnExit` when the JVM exits.
   */
 object IndexCache {
   /** `df.pin()`: materialize `df` now and cut its lineage, so every
@@ -54,8 +65,8 @@ object IndexCache {
   /** True for a reliable pin, false for a local one; no pin on a
     * cluster without a checkpoint directory. */
   private[graft] def reliablePin(checkpointDir: Option[String], isLocal: Boolean): Boolean = {
-    require(checkpointDir.isDefined || isLocal, "pinning on a non-local master needs a " +
-      "reliable checkpoint directory: call SparkContext.setCheckpointDir first")
+    require(checkpointDir.isDefined || isLocal, "pins and scratch files on a non-local master " +
+      "need a reliable checkpoint directory: call SparkContext.setCheckpointDir first")
     checkpointDir.isDefined
   }
 
@@ -76,9 +87,8 @@ object IndexCache {
     // sporadic single-query bench failures at new snapshot dirs). So
     // the map only ever computes a trivial Holder, and `build` runs
     // under the HOLDER's monitor instead: same-key builds are
-    // serialized (two threads racing a builder that writes a shared
-    // /tmp layout path with mode=overwrite — ivfLayout, persistByPrefix
-    // — would otherwise race on the directory), while nested builds
+    // serialized (two threads racing a builder that writes one
+    // [[layout]] directory would otherwise race on it), while nested builds
     // take different holders' monitors in build-nesting order (acyclic
     // by construction), so reentrancy stays deadlock-free.
     val h = cache.computeIfAbsent(key, _ => new Holder)
@@ -93,49 +103,62 @@ object IndexCache {
   /** Drop every cached index (all snapshots, all kinds). */
   def invalidate(): Unit = cache.clear()
 
-  /** Per-JVM disk root for a derived layout family
-    * (`/tmp/<family>/<appId>/<sanitized dir>`): the applicationId
-    * component guarantees two JVMs building against the same snapshot
-    * can never overwrite — or rm -rf — each other's files mid-build.
-    * Cross-JVM disk reuse was never exploited anyway: IndexCache is
-    * empty at JVM start, so every session rebuilt its layouts
-    * (mode=overwrite) regardless.
-    *
-    * GC: every per-app root is registered with [[registerGcPath]] and
-    * deleted by a JVM shutdown hook — normal exits leave nothing
-    * behind, so repeated sessions don't accumulate dead layout trees.
-    * A kill -9 still leaks its root (deliberately: pruning SIBLING
-    * appIds at startup would reintroduce the exact cross-JVM rm -rf
-    * race the per-app naming closed — a live sibling's layouts look
-    * identical to a crashed one's), bounded by /tmp's host lifetime.
+  /** Where a derived on-disk index or scratch store of this application
+    * lives: `<base>/<family>/<appId>/<sanitized dir>`, with the base
+    * chosen by the same decision as [[Pin.pin]]:
+    *  - a checkpoint directory is set: under it, so executors on any
+    *    node read and write one shared filesystem;
+    *  - none, on a local master: under `/tmp`, which every task of the
+    *    one JVM shares;
+    *  - none, on a cluster: fails, since `/tmp` resolves against
+    *    `fs.defaultFS` and need not be shared by the executors.
+    * The applicationId component keeps two JVMs building against one
+    * snapshot from overwriting or deleting each other's files.
     */
-  def layoutRoot(spark: SparkSession, family: String, dir: String): String = {
-    val app = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9.-]", "_")
-    val d = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    registerGcPath(s"/tmp/$family/$app")
-    s"/tmp/$family/$app/$d"
+  private[graft] def scratchPath(spark: SparkSession, family: String, dir: String): Path = {
+    val sc = spark.sparkContext
+    // no leading '_' or '.': Spark and Hadoop readers treat such names as hidden
+    def clean(s: String) = s.replaceAll("[^A-Za-z0-9.]", "_").dropWhile(c => c == '_' || c == '.')
+    val base = scratchBase(sc.getCheckpointDir, sc.isLocal)
+    new Path(new Path(new Path(base, family), clean(sc.applicationId)), clean(dir))
   }
 
-  /** Register a LOCAL filesystem path (this JVM's own scratch — layout
-    * roots, per-app bucketed-table locations) for recursive deletion at
-    * JVM exit. Idempotent; safe to call from executor-side-free driver
-    * code only.
+  /** The base directory of [[scratchPath]]; no base on a cluster without
+    * a checkpoint directory. */
+  private[graft] def scratchBase(checkpointDir: Option[String], isLocal: Boolean): String =
+    if (reliablePin(checkpointDir, isLocal)) checkpointDir.get else "/tmp"
+
+  /** An empty directory at [[scratchPath]], returned fully qualified.
+    * Its per-app root is registered with its own Hadoop FileSystem's
+    * `deleteOnExit`, so the FileSystem deletes it when it closes at JVM
+    * exit, on whatever store it lives. A killed JVM leaves its root
+    * behind: deleting sibling appIds' roots at start would race a live
+    * sibling, whose files look like a crashed one's.
     */
-  def registerGcPath(path: String): Unit = {
-    gcPaths.add(path)
-    gcHookInstalled // force the lazy registration exactly once
+  def scratchDir(spark: SparkSession, family: String, dir: String): String = {
+    val out = scratchPath(spark, family, dir)
+    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(out, true)
+    fs.mkdirs(out)
+    fs.deleteOnExit(out.getParent)
+    fs.makeQualified(out).toString
   }
 
-  private val gcPaths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private lazy val gcHookInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      gcPaths.forEach(p => deleteRecursively(new java.io.File(p)))
-    }, "graft-layout-gc"))
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
+  /** Write `data` as the derived on-disk index `name` of snapshot `dir`
+    * in [[scratchDir]]`(family, dir/name)`, and return the frame that
+    * reads the files. Hash repartitioning on `partitionBy` puts each
+    * partition value on one task, so each partition directory holds one
+    * file; `sortBy` orders rows within each task, so row groups carry
+    * tight min/max stats. The read uses `data.schema`: partition
+    * discovery cannot infer types from an empty write, and the read
+    * must not scan footers to infer them.
+    */
+  def layout(spark: SparkSession, family: String, dir: String, name: String, data: DataFrame,
+      partitionBy: Seq[String], sortBy: Seq[String]): DataFrame = {
+    val out = scratchDir(spark, family, s"$dir/$name")
+    data.repartition(partitionBy.map(col): _*)
+      .sortWithinPartitions(sortBy.map(col): _*)
+      .write.mode("overwrite").partitionBy(partitionBy: _*).parquet(out)
+    spark.read.schema(data.schema).parquet(out)
   }
 }

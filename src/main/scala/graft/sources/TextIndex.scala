@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * This is the reference's core architecture: an Azure Search
   * `IsSearchable` field (IndexModels/TextIndexModel.cs:9-13) is backed
   * by a PREBUILT Lucene inverted index — queries hit the index, never
-  * the lake. Re-scanning and re-tokenizing the corpus per query (the
-  * round-6 formulation) is linear in corpus size; probing the posting
+  * the lake. Re-scanning and re-tokenizing the corpus per query is
+  * linear in corpus size; probing the posting
   * lists is linear in the MATCHED postings. At 100 TB the index builds
   * in one tokenize pass per analyzer and every query after that reads
   * kilobytes-to-megabytes of postings.
@@ -120,7 +120,7 @@ object TextIndex {
   def postingsStdPersisted(spark: SparkSession, dir: String): DataFrame = {
     val built = postingsStd(spark, dir) // resolve before entering the cache slot (no reentrant computeIfAbsent)
     IndexCache.getOrBuild(spark, "text_postings_std_disk", dir) {
-      persistByPrefix(spark, built, dir, "postings_std", Seq("tok_prefix", "tok"))
+      byPrefix(spark, built, dir, "postings_std", Seq("tok"))
     }
   }
 
@@ -131,23 +131,16 @@ object TextIndex {
   def prefixOf(term: String): String =
     if (term.isEmpty) "_" else term.substring(0, 1)
 
-  /** Shared writer for the prefix-partitioned posting layouts: add the
-    * `tok_prefix` partition column, cluster by (prefix, tok, …), write
-    * once per snapshot, read back with the explicit schema.
-    */
-  private def persistByPrefix(spark: SparkSession, built: DataFrame,
-      dir: String, name: String, sortCols: Seq[String]): DataFrame = {
-    val out = s"${IndexCache.layoutRoot(spark, "graft_textindex", dir)}/$name"
-    val data = built.withColumn("tok_prefix",
-      coalesce(nullif(substring(col("tok"), 1, 1), lit("")), lit("_")))
-    data.repartition(col("tok_prefix"))
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode("overwrite").partitionBy("tok_prefix").parquet(out)
-    spark.read.schema(data.schema).parquet(out)
-  }
+  /** A prefix-partitioned posting layout: `tok_prefix` directories
+    * ([[prefixOf]] as a column), rows sorted by (prefix, `sortBy`…). */
+  private def byPrefix(spark: SparkSession, built: DataFrame, dir: String, name: String,
+      sortBy: Seq[String]): DataFrame =
+    IndexCache.layout(spark, "graft_textindex", dir, name,
+      built.withColumn("tok_prefix", coalesce(nullif(substring(col("tok"), 1, 1), lit("")), lit("_"))),
+      Seq("tok_prefix"), "tok_prefix" +: sortBy)
 
   /** The POSITIONAL postings as a persisted prefix-partitioned lake
-    * layout (round 9) — extends the [[postingsStdPersisted]] disk
+    * layout — extends the [[postingsStdPersisted]] disk
     * architecture to the (tok, doc_id, pos) form phrase queries probe:
     * a phrase term's probe prunes to its `tok_prefix` directory at
     * planning time and pushes the `tok` equality to row groups, so the
@@ -157,25 +150,23 @@ object TextIndex {
   def postingsPosStdPersisted(spark: SparkSession, dir: String): DataFrame = {
     val built = postingsPosStd(spark, dir) // resolve outside the cache slot
     IndexCache.getOrBuild(spark, "text_postings_pos_std_disk", dir) {
-      persistByPrefix(spark, built, dir, "postings_pos_std",
-        Seq("tok_prefix", "tok", "doc_id", "pos"))
+      byPrefix(spark, built, dir, "postings_pos_std", Seq("tok", "doc_id", "pos"))
     }
   }
 
-  /** The WHITESPACE postings persisted by prefix (round 9) — the disk
+  /** The WHITESPACE postings persisted by prefix — the disk
     * twin of [[postingsWs]], probed by the fuzzy family's posting
     * expansion after the dictionary probe has fixed the matched terms.
     */
   def postingsWsPersisted(spark: SparkSession, dir: String): DataFrame = {
     val built = postingsWs(spark, dir)
     IndexCache.getOrBuild(spark, "text_postings_ws_disk", dir) {
-      persistByPrefix(spark, built, dir, "postings_ws",
-        Seq("tok_prefix", "tok", "doc_id"))
+      byPrefix(spark, built, dir, "postings_ws", Seq("tok", "doc_id"))
     }
   }
 
   /** The whitespace DICTIONARY persisted as a LENGTH-partitioned lake
-    * layout (round 9): `tok_len` directories make the fuzzy query's
+    * layout: `tok_len` directories make the fuzzy query's
     * length-band prefilter (|len(tok) − len(q)| ≤ maxEdits — the
     * Lucene fuzzy-automaton bound: one edit changes the length by at
     * most one) a PLANNING-TIME partition prune, so a distance-1 probe
@@ -186,12 +177,9 @@ object TextIndex {
   def vocabWsPersisted(spark: SparkSession, dir: String): DataFrame = {
     val built = vocabWs(spark, dir)
     IndexCache.getOrBuild(spark, "text_vocab_ws_disk", dir) {
-      val out = s"${IndexCache.layoutRoot(spark, "graft_textindex", dir)}/vocab_ws"
-      val data = built.withColumn("tok_len", length(col("tok")).cast("int"))
-      data.repartition(col("tok_len"))
-        .sortWithinPartitions(col("tok_len"), col("tok"))
-        .write.mode("overwrite").partitionBy("tok_len").parquet(out)
-      spark.read.schema(data.schema).parquet(out)
+      IndexCache.layout(spark, "graft_textindex", dir, "vocab_ws",
+        built.withColumn("tok_len", length(col("tok")).cast("int")),
+        Seq("tok_len"), Seq("tok_len", "tok"))
     }
   }
 

@@ -620,10 +620,7 @@ object StreamingOps extends QueryPack {
     val c1 = dayNs("2024-01-11T00:00:00Z")
     val c2 = dayNs("2024-01-21T00:00:00Z")
     val table = graft.sources.IndexCache.getOrBuild(spark, "bitmap_store", dir) {
-      val root = graft.sources.IndexCache.layoutRoot(spark, "graft_bitmapstore", dir)
-      val p = new org.apache.hadoop.fs.Path(root)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+      val root = graft.sources.IndexCache.scratchDir(spark, "graft_bitmapstore", dir)
       val store = new graft.sources.IndexStore(spark, root, "k")
       val ev = Tables.events(spark, dir)
       def slice(cond: org.apache.spark.sql.Column): DataFrame =

@@ -3,12 +3,11 @@ package graft
 import graft.operators.Dedup
 import graft.sources.IndexStore
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class IncrementalDedupSpec extends SparkSpec {
 
   test("incremental candidates match the batch LSH result, without re-hashing the corpus") {
-    val root = Files.createTempDirectory("graft_bands").toString
+    val root = tempDir("graft_bands").toString
     val store = new IndexStore(spark, root, "key")
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
 

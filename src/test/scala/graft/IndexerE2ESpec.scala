@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Indexer
 import graft.sources.IndexStore
-import java.nio.file.Files
 
 /** End-to-end incremental indexer: run → state advances → rerun is a
   * no-op → new events produce a delta-only merge.
@@ -12,7 +11,7 @@ class IndexerE2ESpec extends SparkSpec {
   private def hconf = spark.sparkContext.hadoopConfiguration
 
   test("a crash between watermark delete and rename is recoverable from the tmp file") {
-    val stateDir = Files.createTempDirectory("graft_wm_crash").toString
+    val stateDir = tempDir("graft_wm_crash").toString
     Indexer.writeWatermark(stateDir, 42L, hconf)
     assert(Indexer.readWatermark(stateDir, hconf) == 42L)
     // simulate writeWatermark(99) crashing after delete(dst), before
@@ -26,8 +25,8 @@ class IndexerE2ESpec extends SparkSpec {
   }
 
   test("incremental runs are watermarked, idempotent, and mergeable") {
-    val idxDir = Files.createTempDirectory("graft_e2e_idx").toString
-    val stateDir = Files.createTempDirectory("graft_e2e_state").toString
+    val idxDir = tempDir("graft_e2e_idx").toString
+    val stateDir = tempDir("graft_e2e_state").toString
     val store = new IndexStore(spark, idxDir, "key")
 
     // first run: everything since epoch
@@ -55,8 +54,8 @@ class IndexerE2ESpec extends SparkSpec {
   }
 
   test("partitioned scheduled runs progress independently with per-partition watermarks") {
-    val idxDir = Files.createTempDirectory("graft_part_idx").toString
-    val stateRoot = Files.createTempDirectory("graft_part_state").toString
+    val idxDir = tempDir("graft_part_idx").toString
+    val stateRoot = tempDir("graft_part_state").toString
     val store = new IndexStore(spark, idxDir, "key")
 
     // run ONLY partition 1 first: its watermark advances, others untouched
@@ -90,8 +89,8 @@ class IndexerE2ESpec extends SparkSpec {
     // partitioned runs record: seed each partition's watermark just
     // below the history key's cutoff (tsAfterNs(cutoff-1) ≡
     // tsSinceNs(cutoff) on int64 nanos) and cross-foot per run.
-    val idxDir = Files.createTempDirectory("graft_hist_idx").toString
-    val stateRoot = Files.createTempDirectory("graft_hist_state").toString
+    val idxDir = tempDir("graft_hist_idx").toString
+    val stateRoot = tempDir("graft_hist_state").toString
     val store = new IndexStore(spark, idxDir, "key")
     val cutoff = graft.operators.PathIndexOps.CutoffNs
     Seq(1, 3).foreach(p => Indexer.writeWatermark(s"$stateRoot/part_$p", cutoff - 1, hconf))
@@ -110,8 +109,8 @@ class IndexerE2ESpec extends SparkSpec {
 
   test("upload failure injection surfaces in uploadFailedCount") {
     import org.apache.spark.sql.functions.col
-    val idxDir = Files.createTempDirectory("graft_fail_idx").toString
-    val stateDir = Files.createTempDirectory("graft_fail_state").toString
+    val idxDir = tempDir("graft_fail_idx").toString
+    val stateDir = tempDir("graft_fail_state").toString
     val store = new IndexStore(spark, idxDir, "key")
     val r = Indexer.runIncremental(spark, sf, store, stateDir,
       uploadReject = Some(col("numbervalue") % 10 === 3))
@@ -141,9 +140,9 @@ class IndexerE2ESpec extends SparkSpec {
   }
 
   test("a full run and a 5-day catch-up return the pinned sf0.001 RunMetrics") {
-    val store = new IndexStore(spark, Files.createTempDirectory("graft_pin_idx").toString,
+    val store = new IndexStore(spark, tempDir("graft_pin_idx").toString,
       "key", partitionCol = Some("filesystem"))
-    val stateDir = Files.createTempDirectory("graft_pin_state").toString
+    val stateDir = tempDir("graft_pin_state").toString
     val r1 = Indexer.runIncremental(spark, sf, store, stateDir)
     assert(r1.metrics == graft.model.RunMetrics(694, 12, 637, 637, 0, 0, 57))
     assert(store.read().get.count() == 637)
@@ -155,8 +154,8 @@ class IndexerE2ESpec extends SparkSpec {
   }
 
   test("a run is two actions, an idle rerun one action that commits no version") {
-    val store = new IndexStore(spark, Files.createTempDirectory("graft_budget_idx").toString, "key")
-    val stateDir = Files.createTempDirectory("graft_budget_state").toString
+    val store = new IndexStore(spark, tempDir("graft_budget_idx").toString, "key")
+    val stateDir = tempDir("graft_budget_state").toString
     val (r1, actions1) = countingActions(Indexer.runIncremental(spark, sf, store, stateDir))
     assert(r1.metrics.uploadCreatedCount > 0)
     assert(actions1 == 2, s"a run with new events should be 2 actions, saw $actions1")
@@ -171,8 +170,8 @@ class IndexerE2ESpec extends SparkSpec {
 
   test("a log holding only deletes advances the watermark and uploads nothing") {
     import org.apache.spark.sql.functions.{col, max}
-    val store = new IndexStore(spark, Files.createTempDirectory("graft_del_idx").toString, "key")
-    val stateDir = Files.createTempDirectory("graft_del_state").toString
+    val store = new IndexStore(spark, tempDir("graft_del_idx").toString, "key")
+    val stateDir = tempDir("graft_del_state").toString
     val r = Indexer.runIncremental(spark, sf, store, stateDir,
       odataFilter = Some("event_type eq 'error'"))
     val maxDeleteNs = Tables.events(spark, sf).filter(col("event_type") === "error")
@@ -185,8 +184,8 @@ class IndexerE2ESpec extends SparkSpec {
 
   test("a run whose merge throws releases its persisted frame and commits nothing") {
     import org.apache.spark.sql.functions.{lit, raise_error}
-    val store = new IndexStore(spark, Files.createTempDirectory("graft_boom_idx").toString, "key")
-    val stateDir = Files.createTempDirectory("graft_boom_state").toString
+    val store = new IndexStore(spark, tempDir("graft_boom_idx").toString, "key")
+    val stateDir = tempDir("graft_boom_state").toString
     val first = Indexer.runIncremental(spark, sf, store, stateDir)
     Indexer.writeWatermark(stateDir, first.newWatermarkNs - 5L * 24 * 3600 * 1000000000L, hconf)
     val wm = Indexer.readWatermark(stateDir, hconf)

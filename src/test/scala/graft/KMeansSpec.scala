@@ -247,14 +247,13 @@ class KMeansSpec extends SparkSpec {
     assert(viaDisk.collect().toSeq == viaMem.collect().toSeq)
     // the written layout holds every cell directory, the probe's scan
     // reads files from exactly the two probed cells
-    // derive the root exactly as ivfLayout does — the pre-round-11
-    // hard-coded /tmp/graft_ivfindex/<sf>/cells path silently read a
-    // STALE leftover layout on long-lived instances and NPEs on a
-    // clean one (layouts moved under per-appId roots in round 11)
-    val root = s"${graft.sources.IndexCache.layoutRoot(spark, "graft_ivfindex", sf)}/cells"
-    val allCells = new java.io.File(root).listFiles().count(_.getName.startsWith("cell="))
+    // the root as IndexCache.layout places it: a hard-coded path reads
+    // a stale leftover layout, or nothing, instead of this app's
+    val root = layoutPath("graft_ivfindex", "cells")
+    val allCells = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(root).count(_.getPath.getName.startsWith("cell="))
     assert(allCells > 2, s"expected many cell dirs, got $allCells")
-    val persisted = spark.read.parquet(root)
+    val persisted = spark.read.parquet(root.toString)
     val plan = Similarity.annIvfPersisted(spark, sf)
       .queryExecution.executedPlan.toString
     // plan-level: the scan carries the cell partition filter
@@ -265,10 +264,9 @@ class KMeansSpec extends SparkSpec {
     assert(files.nonEmpty && files.forall(f => f.contains("cell=0") || f.contains("cell=1")),
       s"cell probe read outside its partitions:\n${files.mkString("\n")}")
     // write-once per snapshot: re-probing must not rewrite the layout
-    val before = new java.io.File(root).lastModified()
+    val before = layoutModified(root)
     Similarity.annIvfPersisted(spark, sf).collect()
-    assert(new java.io.File(root).lastModified() == before,
-      "persisted IVF layout was rewritten by a probe")
+    assert(layoutModified(root) == before, "persisted IVF layout was rewritten by a probe")
   }
 
   test("round 9: every ANN family probe reads the persisted layout with a cell partition filter") {

@@ -6,19 +6,17 @@ import java.nio.file.Files
 import graft.sources.{DocumentSource, IndexCache}
 import org.apache.spark.sql.DataFrame
 
-/** The one pinning primitive ([[IndexCache.Pin]]): every pin in the
-  * engine goes through it, its reliable branch answers like its local
-  * one, and a cluster with no checkpoint directory cannot pin at all.
+/** The one pinning primitive ([[IndexCache.Pin]]) and the one layout
+  * primitive ([[IndexCache.layout]], [[IndexCache.scratchDir]]): every
+  * pin and every derived on-disk index of the engine goes through them,
+  * their checkpoint-directory branch answers like the local one and
+  * writes under that directory, and a cluster with no checkpoint
+  * directory can neither pin nor place files.
   */
 class PinSpec extends SparkSpec {
 
   private def files(d: File): Seq[File] =
     Option(d.listFiles()).toSeq.flatten.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-
-  private def rm(f: File): Unit = {
-    Option(f.listFiles()).toSeq.flatten.foreach(rm)
-    f.delete(): Unit
-  }
 
   private def lines(f: File): Seq[String] = {
     val src = scala.io.Source.fromFile(f, "UTF-8")
@@ -40,6 +38,18 @@ class PinSpec extends SparkSpec {
     assert(h.count(_.contains(".checkpoint(")) == 1)
   }
 
+  test("src/main writes layouts and scratch roots only through IndexCache") {
+    val sources = files(new File("src/main/scala")).filter(_.getName.endsWith(".scala"))
+    assert(sources.size > 20)
+    def placement(l: String) =
+      l.contains(".write.mode(\"overwrite\")") || l.contains("\"/tmp") || l.contains("addShutdownHook")
+    val stray = for {
+      f <- sources if f.getName != "IndexCache.scala" && f.getName != "GenData.scala"
+      (l, i) <- lines(f).zipWithIndex if placement(l)
+    } yield s"${f.getPath}:${i + 1}: ${l.trim}"
+    assert(stray.isEmpty, stray.mkString("\n"))
+  }
+
   test("a non-local master with no checkpoint directory cannot pin") {
     val e = intercept[IllegalArgumentException](IndexCache.reliablePin(None, isLocal = false))
     assert(e.getMessage.contains("SparkContext.setCheckpointDir"))
@@ -48,12 +58,24 @@ class PinSpec extends SparkSpec {
     assert(!IndexCache.reliablePin(None, isLocal = true))
   }
 
+  test("a non-local master with no checkpoint directory gets no scratchDir") {
+    val e = intercept[IllegalArgumentException](IndexCache.scratchBase(None, isLocal = false))
+    assert(e.getMessage.contains("SparkContext.setCheckpointDir"))
+    assert(IndexCache.scratchBase(Some("hdfs:///ck/1"), isLocal = false) == "hdfs:///ck/1")
+    assert(IndexCache.scratchBase(None, isLocal = true) == "/tmp")
+  }
+
   test("reliable pins under a checkpoint directory give the local answers") {
-    // one key per module that pins
+    // one key per module that pins, and every key that writes a layout
+    // or a scratch store
     val keys = Seq("list_paths_delta", "search_score_bm25", "dedup_clusters", "ann_ivf",
       "graph_pagerank", "events_interval_join", "text_unigram_logprob", "rebuild_index",
-      "stream_bitmap", "mm_phash_dedup")
-    val lake = Files.createTempDirectory("graft_pin_lake")
+      "stream_bitmap", "mm_phash_dedup", "ann_ivf_persisted", "search_bm25_persisted",
+      "search_fuzzy", "search_phrase", "dedup_lookup_persisted", "layout_zorder",
+      "layout_compaction")
+    val families = Seq("graft_ivfindex", "graft_textindex", "graft_lshindex", "graft_layout",
+      "graft_compact", "graft_bitmapstore")
+    val lake = tempDir("graft_pin_lake")
     Seq("a/x.json", "a/b/y.json", "c/z.json").foreach { p =>
       val f = lake.resolve(p)
       Files.createDirectories(f.getParent)
@@ -67,7 +89,14 @@ class PinSpec extends SparkSpec {
     }
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
     val local = answers()
-    val ck = Files.createTempDirectory("graft_pin_ck")
+    // each family's per-app root, as the context currently places it
+    def roots() = families.map(f => new File(IndexCache.scratchPath(spark, f, "d").getParent.toUri.getPath))
+    // the local leg's files under /tmp/<family>/<appId>, with their times
+    val tmpRoots = roots()
+    def tmpLayouts() = tmpRoots.flatMap(files).map(f => f.getPath -> f.lastModified()).sorted
+    val before = tmpLayouts()
+    assert(before.nonEmpty)
+    val ck = tempDir("graft_pin_ck")
     try {
       spark.sparkContext.setCheckpointDir(ck.toString)
       val reliable = answers()
@@ -77,11 +106,15 @@ class PinSpec extends SparkSpec {
       }
       val written = files(ck.toFile).filter(_.getParentFile.getName.startsWith("rdd-"))
       assert(written.nonEmpty)
+      val ckPath = ck.toFile.getCanonicalPath
+      roots().foreach { r =>
+        assert(r.getCanonicalPath.startsWith(ckPath), r)
+        assert(files(r).nonEmpty, r)
+      }
+      assert(tmpLayouts() == before, "a layout was written under /tmp with a checkpoint directory set")
     } finally {
       spark.sparkContext.setCheckpointDir(null)
       IndexCache.invalidate()
-      rm(ck.toFile)
-      rm(lake.toFile)
     }
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
   }

@@ -75,7 +75,7 @@ class PropertySpec extends SparkSpec {
       val rnd = new Random(seed)
       val batch = Seq.fill(20)((rnd.alphanumeric.take(6).mkString, rnd.nextInt(100)))
         .distinctBy(_._1)
-      val root = java.nio.file.Files.createTempDirectory("graft_prop").toString
+      val root = tempDir("graft_prop").toString
       val store = new graft.sources.IndexStore(spark, root, "key")
       val r1 = store.mergeOrUpload(batch.toDF("key", "v"))
       assert(r1.created == batch.length && r1.modified == 0, s"seed=$seed")

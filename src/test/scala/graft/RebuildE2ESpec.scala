@@ -13,14 +13,14 @@ import java.nio.file.Files
 class RebuildE2ESpec extends SparkSpec {
 
   test("rebuild path index from a real directory tree") {
-    val lake = Files.createTempDirectory("graft_lake")
+    val lake = tempDir("graft_lake")
     Files.createDirectories(lake.resolve("fsA/data/part_1"))
     Files.createDirectories(lake.resolve("fsA/data/part_2"))
     Files.writeString(lake.resolve("fsA/data/part_1/f1.json"), """{"a":1}""")
     Files.writeString(lake.resolve("fsA/data/part_1/f2.json"), """{"a":2}""")
     Files.writeString(lake.resolve("fsA/data/part_2/f3.json"), """{"a":3}""")
 
-    val idxDir = Files.createTempDirectory("graft_rebuild_idx").toString
+    val idxDir = tempDir("graft_rebuild_idx").toString
     val store = new IndexStore(spark, idxDir, "key")
 
     val listing = DocumentSource.listFilesRecursive(spark, lake.toString)
@@ -56,7 +56,7 @@ class RebuildE2ESpec extends SparkSpec {
     // 4 levels deep, branching 3 — 81 leaf dirs, 2 files each, plus a
     // file at every intermediate level: exercises multi-level frontier
     // iteration and empty-dir handling
-    val lake = Files.createTempDirectory("graft_deep")
+    val lake = tempDir("graft_deep")
     var expected = 0
     def build(dir: java.nio.file.Path, depth: Int): Unit = {
       Files.writeString(dir.resolve(s"at_depth$depth.json"), s"""{"d":$depth}""")
@@ -80,7 +80,7 @@ class RebuildE2ESpec extends SparkSpec {
 
   test("distributed listing matches the Hadoop recursive iterator on random trees") {
     val rnd = new scala.util.Random(7)
-    val lake = Files.createTempDirectory("graft_rand")
+    val lake = tempDir("graft_rand")
     def build(dir: java.nio.file.Path, depth: Int): Unit = {
       (0 until rnd.nextInt(4)).foreach(i =>
         Files.write(dir.resolve(s"f${depth}_$i.bin"), Array.fill(rnd.nextInt(9) + 1)(1.toByte)))

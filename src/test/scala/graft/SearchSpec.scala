@@ -407,11 +407,10 @@ class SearchSpec extends SparkSpec {
     assert(viaDisk == viaMem)
     // write-once per snapshot: a second probe must not rewrite the
     // layout (a per-query rewrite would be a 100 TB-scale bug)
-    val root = new java.io.File(
-      s"/tmp/graft_textindex/${sf.replaceAll("[^A-Za-z0-9.]", "_")}/postings_std")
-    val before = root.lastModified()
+    val root = layoutPath("graft_textindex", "postings_std")
+    val before = layoutModified(root)
     Search.searchBm25Persisted(spark, sf).collect()
-    assert(root.lastModified() == before, "persisted postings were rewritten by a probe")
+    assert(layoutModified(root) == before, "persisted postings were rewritten by a probe")
   }
 
   test("round 9: phrase/boolean/fuzzy probe the persisted layouts with partition filters") {

@@ -8,7 +8,7 @@ import java.nio.file.Files
 class SourcesSpec extends SparkSpec {
 
   test("IndexStore merge-or-upload: created/modified counts and latest-wins") {
-    val root = Files.createTempDirectory("graft_idx").toString
+    val root = tempDir("graft_idx").toString
     val store = new IndexStore(spark, root, "key")
     import spark.implicits._
 
@@ -26,7 +26,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("IndexStore merge runs exactly one action (metrics ride the write job)") {
-    val root = Files.createTempDirectory("graft_idx1a").toString
+    val root = tempDir("graft_idx1a").toString
     val store = new IndexStore(spark, root, "key")
     import spark.implicits._
     store.mergeOrUpload(Seq(("k1", "v1"), ("k2", "v2")).toDF("key", "value"))
@@ -57,7 +57,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("IndexStore delete-by-key removes tombstoned keys") {
-    val root = Files.createTempDirectory("graft_idx2").toString
+    val root = tempDir("graft_idx2").toString
     val store = new IndexStore(spark, root, "key")
     import spark.implicits._
     store.mergeOrUpload(Seq(("a", 1), ("b", 2), ("c", 3)).toDF("key", "n"))
@@ -68,7 +68,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partitioned IndexStore prunes partitions on filtered reads") {
-    val root = Files.createTempDirectory("graft_idx3").toString
+    val root = tempDir("graft_idx3").toString
     val store = new IndexStore(spark, root, "key", partitionCol = Some("fs"))
     import spark.implicits._
     store.mergeOrUpload(Seq(
@@ -100,7 +100,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("IndexStore within-batch duplicate keys resolve by the caller's sequence column") {
-    val root = Files.createTempDirectory("graft_idx_seq").toString
+    val root = tempDir("graft_idx_seq").toString
     val store = new IndexStore(spark, root, "key", seqCol = Some("ts"))
     import spark.implicits._
     // same key twice in ONE batch: highest ts must win, deterministically
@@ -119,7 +119,7 @@ class SourcesSpec extends SparkSpec {
   test("IndexStore works through the Hadoop FileSystem API (file: URI root)") {
     // an explicit scheme'd URI exercises the same code path an
     // hdfs:///abfs:// root would take (no java.io.File assumptions)
-    val root = "file://" + Files.createTempDirectory("graft_idx_uri").toString
+    val root = "file://" + tempDir("graft_idx_uri").toString
     val store = new IndexStore(spark, root, "key")
     import spark.implicits._
     store.mergeOrUpload(Seq(("a", 1), ("b", 2)).toDF("key", "n"))
@@ -131,7 +131,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("IndexStore failure injection counts rejected rows as failed uploads") {
-    val root = Files.createTempDirectory("graft_idx_fail").toString
+    val root = tempDir("graft_idx_fail").toString
     val store = new IndexStore(spark, root, "key")
     import spark.implicits._
     val r = store.mergeOrUpload(
@@ -143,7 +143,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("json source tolerates corrupt records and reports them") {
-    val dir = Files.createTempDirectory("graft_json")
+    val dir = tempDir("graft_json")
     Files.writeString(dir.resolve("docs.json"),
       """{"id": 1, "s": "ok"}
         |{"id": 2, "s": "also ok"}
@@ -159,7 +159,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("recursive listing finds nested files and skips directories") {
-    val dir = Files.createTempDirectory("graft_ls")
+    val dir = tempDir("graft_ls")
     Files.createDirectories(dir.resolve("a/b"))
     Files.write(dir.resolve("root.txt"), Array[Byte](1))
     Files.write(dir.resolve("a/mid.txt"), Array[Byte](1, 2))
@@ -172,7 +172,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("IndexStore schema evolution and compaction") {
-    val root = Files.createTempDirectory("graft_idx4").toString
+    val root = tempDir("graft_idx4").toString
     val store = new IndexStore(spark, root, "key")
     import spark.implicits._
     store.mergeOrUpload(Seq(("a", 1)).toDF("key", "n"))
@@ -190,7 +190,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("optimize compacts the live snapshot into few files") {
-    val root = Files.createTempDirectory("graft_idx5").toString
+    val root = tempDir("graft_idx5").toString
     val store = new IndexStore(spark, root, "key")
     import spark.implicits._
     // many merges → many small files
@@ -204,7 +204,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("binary source reads payload bytes with metadata") {
-    val dir = Files.createTempDirectory("graft_bin")
+    val dir = tempDir("graft_bin")
     Files.write(dir.resolve("a.bin"), Array[Byte](1, 2, 3))
     Files.write(dir.resolve("b.bin"), Array[Byte](4, 5))
     val df = DocumentSource.binaryFiles(spark, dir.toString, "*.bin")
@@ -218,7 +218,7 @@ class SourcesSpec extends SparkSpec {
     store.read().toSeq.flatMap(_.select("key").collect().map(_.getString(0))).sorted
 
   test("IndexStore tombstone merge: created, modified and deleted from one action") {
-    val root = Files.createTempDirectory("graft_idx_tomb").toString
+    val root = tempDir("graft_idx_tomb").toString
     val store = new IndexStore(spark, root, "key")
     import spark.implicits._
     store.mergeOrUpload(Seq(("k1", "v1", false), ("k2", "v2", false), ("k3", "v3", false))
@@ -256,7 +256,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("IndexStore tombstones: absent keys are a no-op, a later upsert resurrects a deleted key") {
-    val root = Files.createTempDirectory("graft_idx_tomb2").toString
+    val root = tempDir("graft_idx_tomb2").toString
     val store = new IndexStore(spark, root, "key", seqCol = Some("ts"))
     import spark.implicits._
     store.mergeOrUpload(Seq(("a", 1L, false), ("b", 1L, false)).toDF("key", "ts", "del"),
@@ -276,7 +276,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("IndexStore schema-evolving merge with tombstones still null-fills") {
-    val root = Files.createTempDirectory("graft_idx_tomb3").toString
+    val root = tempDir("graft_idx_tomb3").toString
     val store = new IndexStore(spark, root, "key")
     import spark.implicits._
     store.mergeOrUpload(Seq(("a", 1), ("b", 2)).toDF("key", "n"))
@@ -295,7 +295,7 @@ class SourcesSpec extends SparkSpec {
       def open(root: String) = new IndexStore(spark, root, "key", partitionCol = part)
       def rows(s: IndexStore) = s.read().map(_.count()).getOrElse(0L)
 
-      val root = Files.createTempDirectory("graft_idx_empty").toString
+      val root = tempDir("graft_idx_empty").toString
       val store = open(root)
       val r = store.mergeOrUpload(Seq.empty[(String, String, Int)].toDF("key", "fs", "n"))
       assert(r.created == 0 && r.modified == 0 && r.deleted == 0, s"partition=$part")
@@ -303,7 +303,7 @@ class SourcesSpec extends SparkSpec {
       store.mergeOrUpload(Seq(("k1", "fs0", 1)).toDF("key", "fs", "n"))
       assert(rows(store) == 1 && rows(open(root)) == 1, s"partition=$part")
 
-      val root2 = Files.createTempDirectory("graft_idx_empty_tomb").toString
+      val root2 = tempDir("graft_idx_empty_tomb").toString
       val store2 = open(root2)
       val r2 = store2.mergeOrUpload(Seq(("k1", "fs0", 1, true)).toDF("key", "fs", "n", "del"),
         tombstone = Some("del"))
@@ -318,7 +318,7 @@ class SourcesSpec extends SparkSpec {
 
       // every row rejected: nothing reaches the merge window's shuffle,
       // and the failures must still be counted
-      val root3 = Files.createTempDirectory("graft_idx_empty_rej").toString
+      val root3 = tempDir("graft_idx_empty_rej").toString
       val r3 = open(root3).mergeOrUpload(Seq(("k1", "fs0", -1), ("k2", "fs1", -2)).toDF("key", "fs", "n"),
         reject = Some(col("n") < 0))
       assert(r3.failed == 2 && r3.created == 0, s"partition=$part")
@@ -327,7 +327,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("IndexStore: a reader polling during a large merge never sees an uncommitted snapshot") {
-    val root = Files.createTempDirectory("graft_idx_poll").toString
+    val root = tempDir("graft_idx_poll").toString
     val store = new IndexStore(spark, root, "key")
     import spark.implicits._
     store.mergeOrUpload(Seq(("seed", 0L)).toDF("key", "n"))
@@ -359,7 +359,7 @@ class SourcesSpec extends SparkSpec {
 
   test("IndexStore read() reuses the committed schema: no footer job, same schema as a fresh store") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_idx_schema").toString
+    val root = tempDir("graft_idx_schema").toString
     def fresh = new IndexStore(spark, root, "key", partitionCol = Some("part"))
     val store = fresh
     // numeric-looking partition values: a path-inferring read would turn
@@ -378,7 +378,7 @@ class SourcesSpec extends SparkSpec {
 
     // unpartitioned: the committed schema is exactly what Spark infers
     // from the files, nested and timestamp columns included
-    val root2 = Files.createTempDirectory("graft_idx_schema2").toString
+    val root2 = tempDir("graft_idx_schema2").toString
     val store2 = new IndexStore(spark, root2, "key")
     store2.mergeOrUpload(Seq(("a", 1L)).toDF("key", "n"))
     store2.mergeOrUpload(Seq(("b", 2L)).toDF("key", "n")
@@ -390,7 +390,7 @@ class SourcesSpec extends SparkSpec {
 
   test("IndexStore memoizes the newest snapshot: repeat reads reuse it, writes and compact move it") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_idx_memo").toString
+    val root = tempDir("graft_idx_memo").toString
     def open = new IndexStore(spark, root, "key", partitionCol = Some("fs"))
     def rows(s: IndexStore): Seq[(String, Long)] =
       s.read().get.collect().map(r => r.getAs[String]("key") -> r.getAs[Long]("n")).toSeq.sorted
@@ -422,7 +422,7 @@ class SourcesSpec extends SparkSpec {
 
   test("IndexStore: a tight reader never opens a commit marker before its schema is in it") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_idx_marker").toString
+    val root = tempDir("graft_idx_marker").toString
     val store = new IndexStore(spark, root, "key")
     store.mergeOrUpload(Seq(("k0", 0L)).toDF("key", "n"))
     // a second store on the root reads each new version's marker the

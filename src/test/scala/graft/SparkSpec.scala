@@ -33,8 +33,36 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** Where [[graft.sources.IndexCache.layout]] writes layout `name` of
+    * `family` for the spec's snapshot. */
+  def layoutPath(family: String, name: String): org.apache.hadoop.fs.Path =
+    graft.sources.IndexCache.scratchPath(spark, family, s"$sf/$name")
+
+  /** The modification time of the layout directory `p`, read through
+    * its Hadoop FileSystem; the directory must exist. */
+  def layoutModified(p: org.apache.hadoop.fs.Path): Long = {
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(p), s"no layout at $p")
+    fs.getFileStatus(p).getModificationTime
+  }
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh temporary directory, deleted with its contents when the
+    * suite ends. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d.toFile)
+    d
+  }
+
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles()).toSeq.flatten.foreach(rm)
+    f.delete(): Unit
+  }
+
   override def afterAll(): Unit = {
-    // shared across suites in one JVM: don't stop
-    super.afterAll()
+    // the session is shared across suites in one JVM: don't stop it
+    try tempDirs.forEach(rm(_)) finally super.afterAll()
   }
 }

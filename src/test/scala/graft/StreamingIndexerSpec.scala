@@ -3,7 +3,6 @@ package graft
 import graft.sources.IndexStore
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** End-to-end streaming indexer: a parquet file source streams change
   * batches into the merge-or-upload IndexStore via foreachBatch — the
@@ -13,9 +12,9 @@ import java.nio.file.Files
 class StreamingIndexerSpec extends SparkSpec {
 
   test("file-source stream drives IndexStore merges batch by batch") {
-    val inDir = Files.createTempDirectory("graft_stream_in").toString
-    val ckDir = Files.createTempDirectory("graft_stream_ck").toString
-    val idxDir = Files.createTempDirectory("graft_stream_idx").toString
+    val inDir = tempDir("graft_stream_in").toString
+    val ckDir = tempDir("graft_stream_ck").toString
+    val idxDir = tempDir("graft_stream_idx").toString
     import spark.implicits._
 
     val schema = "key STRING, value STRING, seq LONG"
@@ -57,8 +56,8 @@ class StreamingIndexerSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ckDir = Files.createTempDirectory("graft_env_ck").toString
-    val idxDir = Files.createTempDirectory("graft_env_idx").toString
+    val ckDir = tempDir("graft_env_ck").toString
+    val idxDir = tempDir("graft_env_idx").toString
     val store = new IndexStore(spark, idxDir, "key")
 
     def env(id: Long, fs: String, path: String, evType: String, t: String): (Long, String) =
@@ -110,9 +109,9 @@ class StreamingIndexerSpec extends SparkSpec {
     * metrics do not double-count the replayed batch.
     */
   test("restart from checkpoint mid-stream: store converges, metrics don't double-count the replayed batch") {
-    val inDir = Files.createTempDirectory("graft_crash_in").toString
-    val ckDir = Files.createTempDirectory("graft_crash_ck").toString
-    val idxDir = Files.createTempDirectory("graft_crash_idx").toString
+    val inDir = tempDir("graft_crash_in").toString
+    val ckDir = tempDir("graft_crash_ck").toString
+    val idxDir = tempDir("graft_crash_idx").toString
     import spark.implicits._
     val store = new IndexStore(spark, idxDir, "key")
     val metrics = new graft.streaming.IndexerStreamMetrics
@@ -209,8 +208,8 @@ class StreamingIndexerSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ckDir = Files.createTempDirectory("graft_env1_ck").toString
-    val idxDir = Files.createTempDirectory("graft_env1_idx").toString
+    val ckDir = tempDir("graft_env1_ck").toString
+    val idxDir = tempDir("graft_env1_idx").toString
     val store = new IndexStore(spark, idxDir, "key")
     val input = MemoryStream[(Long, String)]
     val query = graft.streaming.StreamingOps.indexBlobEventStream(
@@ -239,8 +238,8 @@ class StreamingIndexerSpec extends SparkSpec {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     for (part <- Seq(None, Some("filesystem"))) {
-      val ckDir = Files.createTempDirectory("graft_env2_ck").toString
-      val idxDir = Files.createTempDirectory("graft_env2_idx").toString
+      val ckDir = tempDir("graft_env2_ck").toString
+      val idxDir = tempDir("graft_env2_idx").toString
       def open() = new IndexStore(spark, idxDir, "key", partitionCol = part)
       val store = open()
       val metrics = new graft.streaming.IndexerStreamMetrics

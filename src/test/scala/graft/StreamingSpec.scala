@@ -511,8 +511,8 @@ class StreamingSpec extends SparkSpec {
   test("streamed bitmap-word maintenance converges to the batch fold, replay-idempotent") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val dirS = java.nio.file.Files.createTempDirectory("graft_bm_store").toString + "/idx"
-    val dirC = java.nio.file.Files.createTempDirectory("graft_bm_ck").toString
+    val dirS = tempDir("graft_bm_store").toString + "/idx"
+    val dirC = tempDir("graft_bm_ck").toString
     val store = new graft.sources.IndexStore(spark, dirS, "k")
 
     val rows = Tables.events(spark, sf)

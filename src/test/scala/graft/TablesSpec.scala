@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** The events loader must normalize every physical `ts` form the driver's
   * testdata has shipped — TIMESTAMP(NANOS) (read as long under
@@ -34,7 +33,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("events loader normalizes long-ns, TIMESTAMP_NTZ, and TIMESTAMP ts to the same ts/ts_ns") {
-    val base = Files.createTempDirectory("graft_tables").toString
+    val base = tempDir("graft_tables").toString
 
     writeEvents(s"$base/long", (col("us") * 1000L).cast(LongType))
     writeEvents(s"$base/ntz", timestamp_micros(col("us")).cast(TimestampNTZType))

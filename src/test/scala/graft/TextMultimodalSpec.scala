@@ -7,7 +7,7 @@ class TextMultimodalSpec extends SparkSpec {
 
   test("fuzzy decontamination flags a reworded benchmark copy, not unrelated docs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_decon").toString
+    val dir = tempDir("graft_decon").toString
     def doc(id: Long, text: String) = (id, text, "en", "srcT", text.length.toLong)
     val vocabA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val benchDocs = (0L until 10L).map(i => doc(i, s"b$i one$i two$i three$i four$i five$i six$i"))
