@@ -24,22 +24,6 @@ object Analyzers {
   def standardTokens(field: Column): Column =
     filter(split(lower(field), "[^a-z0-9]+"), t => t =!= "")
 
-  /** Multi-term `search.ismatch` under the standard analyzer: the query
-    * is analyzed with the same pipeline as the field (lowercase, split
-    * on non-alphanumerics), and the document matches when ALL query
-    * terms occur in its token set (`matchAll = true`, Azure Search's
-    * `searchMode=all`) or ANY term does (`matchAll = false`, the
-    * default `searchMode=any`). Pure Column expressions — the per-term
-    * membership tests stay inside whole-stage codegen.
-    */
-  def isMatchTerms(field: Column, query: String, matchAll: Boolean = true): Column = {
-    val terms = query.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
-    require(terms.nonEmpty, s"ismatch query analyzed to zero terms: '$query'")
-    val toks = standardTokens(field)
-    val hits = terms.map(t => array_contains(toks, t))
-    if (matchAll) hits.reduce(_ && _) else hits.reduce(_ || _)
-  }
-
   /** Wildcard ismatch under the keyword analyzer: '*' in the pattern
     * matches any run of characters; comparison is lowercase. A pure
     * prefix pattern compiles to startswith (scan-friendly); general

@@ -50,9 +50,11 @@ object Vectors {
   def int8Scale(v: Column): Column =
     aggregate(asDouble(v), lit(0.0), (acc, x) => greatest(acc, abs(x))) / 127.0
 
-  /** Quantize to int8 (stored as array<tinyint> + the scale column). */
+  /** Quantize to int8 (stored as array<tinyint> + the scale column).
+    * Rounds by floor(x/scale + 0.5), which every engine computes alike
+    * (`round` rounds half away from zero, so negative ties differ). */
   def quantizeInt8(v: Column, scale: Column): Column =
-    transform(asDouble(v), x => round(x / scale).cast("byte"))
+    transform(asDouble(v), x => floor(x / scale + 0.5).cast("byte"))
 
   /** Cosine directly on quantized vectors — scales cancel, so this is
     * the dot/norms of the int8 codes in double.

@@ -1,51 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Greedy upload batching with BOTH caps of the reference's uploader
   * (reference: AzureSearchIndexer/BatchingUploader.cs:66-99): a batch
   * closes when it holds `maxCount` docs OR when adding the next doc
   * would push it past `maxBytes`; a doc individually larger than
   * `maxBytes` is skipped and counted (FailedTooLargeCount).
   *
-  * Greedy batching is sequential by nature, so it runs per partition —
-  * which is exactly the production shape: each executor core IS one
-  * concurrent uploader with its own batch buffer (the reference runs
-  * `maxUploadThreads` concurrent batch builders the same way).
+  * Greedy batching is sequential by nature, so `batch_assign`
+  * ([[IndexerOps.batchAssign]]) runs it once per count bucket, the
+  * buckets in parallel — like the reference's `maxUploadThreads`
+  * concurrent batch builders, each with its own batch buffer.
   */
 object Batching {
 
-  final case class BatchAssignment(batchInPartition: Long, tooLarge: Boolean)
-
-  /** Assign (partitionId, batchId, tooLarge) per doc. `sizeCol` must be
-    * a column holding the doc's serialized size in bytes.
-    */
-  def assign(df: DataFrame, sizeCol: String, maxCount: Int, maxBytes: Long): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val schema = df.schema
-      .add("part_id", "integer").add("batch_id", "long").add("too_large", "boolean")
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val sizeIdx = df.schema.fieldIndex(sizeCol)
-    df.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var batch = 0L; var count = 0; var bytes = 0L
-      it.map { row =>
-        val sz = row.getLong(sizeIdx)
-        val tooLarge = sz > maxBytes
-        var assigned = -1L
-        if (!tooLarge) {
-          if (count >= maxCount || bytes + sz > maxBytes) { batch += 1; count = 0; bytes = 0L }
-          assigned = batch; count += 1; bytes += sz
-        }
-        org.apache.spark.sql.Row.fromSeq(row.toSeq ++ Seq(pid, assigned, tooLarge))
-      }
-    }(enc)
-  }
-
   /** In-memory greedy batcher for a single uploader — the direct analog
-    * of one UploadBatchesAsync loop; used per partition and in specs.
+    * of one UploadBatchesAsync loop; used per count bucket and in specs.
     */
   def greedy[T](docs: Iterator[(T, Long)], maxCount: Int, maxBytes: Long): (Vector[Vector[T]], Long) = {
     var tooLarge = 0L

@@ -30,18 +30,32 @@ object Dedup extends QueryPack {
     * core; partitioning on doc_id keeps the minhash groupBy
     * exchange-free.
     */
-  def shingled(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    val base = Tables.documents(spark, dir).select(col("doc_id"), toks.as("t"))
-    Tables.parallelized(spark, base, "doc_id")
-      .filter(size(col("t")) >= 3)
+  def shingled(spark: SparkSession, dir: String): DataFrame =
+    shinglesOf(Tables.parallelized(spark, tokenized(Tables.documents(spark, dir)), "doc_id"))
+
+  /** doc_id → NumPerms min-hashes of the snapshot ([[minhashesOf]]). */
+  def minhashes(spark: SparkSession, dir: String): DataFrame =
+    minhashesOf(shingled(spark, dir))
+
+  // The three stages of the minhash-band pipeline, over frames. The
+  // snapshot builders and the store-backed incremental path both run
+  // them, so a batch's bands equal the snapshot's bands of its docs.
+
+  /** (doc_id, text) → (doc_id, t): the doc's whitespace tokens. */
+  private def tokenized(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(col("text"), " ").as("t"))
+
+  /** (doc_id, t) → (doc_id, sh): word 3-gram shingles; docs with <3
+    * tokens drop out. */
+  def shinglesOf(tokens: DataFrame): DataFrame =
+    tokens.filter(size(col("t")) >= 3)
       .select(col("doc_id"), explode(transform(
         sequence(lit(0), size(col("t")) - 3),
         i => concat_ws(" ", element_at(col("t"), i + 1), element_at(col("t"), i + 2), element_at(col("t"), i + 3))))
         .as("sh"))
-  }
 
-  /** doc_id → NumPerms min-hashes (hex-string minima of salted md5).
+  /** (doc_id, sh) → doc_id, m0…m8: NumPerms min-hashes (hex-string
+    * minima of salted md5).
     *
     * Hashes are computed inline on the shingle stream with a map-side
     * partial min per (doc, perm) — no materialized shingle vocabulary.
@@ -50,11 +64,23 @@ object Dedup extends QueryPack {
     * entries and cannot live in every executor. md5 is cheap; the
     * shuffle of per-doc partial minima is the only real cost.)
     */
-  def minhashes(spark: SparkSession, dir: String): DataFrame = {
-    val sh = shingled(spark, dir)
+  def minhashesOf(shingles: DataFrame): DataFrame = {
     val aggs = (0 until NumPerms).map(p =>
       min(md5(concat(lit(s"$p:"), col("sh")).cast("binary"))).as(s"m$p"))
-    sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+    shingles.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** (doc_id, m0…m8) → (doc_id, band, sig): LSH band signatures (md5
+    * of each band's row minhashes). Docs sharing any (band, sig) are
+    * near-dup candidates.
+    */
+  def bandsOf(minhashes: DataFrame): DataFrame = {
+    val bandSigs = (0 until Bands).map { b =>
+      val ms = (0 until 3).map(r => col(s"m${b * 3 + r}"))
+      struct(lit(b).as("band"), md5(concat(ms: _*).cast("binary")).as("sig"))
+    }
+    minhashes.select(col("doc_id"), explode(array(bandSigs: _*)).as("bs"))
+      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
   /** The per-doc minhash SKETCH table, staged once per corpus snapshot
@@ -74,18 +100,10 @@ object Dedup extends QueryPack {
       minhashes(spark, dir).pin()
     }
 
-  /** doc_id → (band, sig): LSH band signatures (md5 of each band's row
-    * minhashes). Docs sharing any (band, sig) are near-dup candidates.
-    */
-  def lshBands(spark: SparkSession, dir: String): DataFrame = {
-    val mh = minhashIndex(spark, dir)
-    val bandSigs = (0 until Bands).map { b =>
-      val ms = (0 until 3).map(r => col(s"m${b * 3 + r}"))
-      struct(lit(b).as("band"), md5(concat(ms: _*).cast("binary")).as("sig"))
-    }
-    mh.select(col("doc_id"), explode(array(bandSigs: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-  }
+  /** doc_id → (band, sig) of the snapshot ([[bandsOf]] over the cached
+    * sketch). */
+  def lshBands(spark: SparkSession, dir: String): DataFrame =
+    bandsOf(minhashIndex(spark, dir))
 
   /** Distinct candidate pairs (a < b) sharing an LSH band.
     *
@@ -134,7 +152,7 @@ object Dedup extends QueryPack {
     * the returned frame READS THE FILES — probing them is the point.
     */
   def bandLayout(spark: SparkSession, dir: String): DataFrame = {
-    val built = bandIndex(spark, dir) // resolve outside the cache slot
+    val built = bandIndex(spark, dir)
     graft.sources.IndexCache.getOrBuild(spark, "lsh_bands_disk", dir) {
       graft.sources.IndexCache.layout(spark, "graft_lshindex", dir, "bands",
         built.withColumn("sig_prefix", substring(col("sig"), 1, 1)),
@@ -156,23 +174,7 @@ object Dedup extends QueryPack {
     */
   def incrementalCandidates(spark: SparkSession, newDocs: DataFrame,
                             bandStore: graft.sources.IndexStore): DataFrame = {
-    val toks = split(col("text"), " ")
-    val sh = newDocs
-      .select(col("doc_id"), toks.as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(0), size(col("t")) - 3),
-        i => concat_ws(" ", element_at(col("t"), i + 1), element_at(col("t"), i + 2), element_at(col("t"), i + 3))))
-        .as("sh"))
-    val aggs = (0 until NumPerms).map(p =>
-      min(md5(concat(lit(s"$p:"), col("sh")).cast("binary"))).as(s"m$p"))
-    val mh = sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-    val bandSigs = (0 until Bands).map { b =>
-      val ms = (0 until 3).map(r => col(s"m${b * 3 + r}"))
-      struct(lit(b).as("band"), md5(concat(ms: _*).cast("binary")).as("sig"))
-    }
-    val newBands = mh.select(col("doc_id"), explode(array(bandSigs: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+    val newBands = bandsOf(minhashesOf(shinglesOf(tokenized(newDocs))))
       .withColumn("key", concat(col("doc_id").cast("string"), lit(":"), col("band").cast("string")))
       .pin() // one shingle pass feeds both the join and the store merge
 

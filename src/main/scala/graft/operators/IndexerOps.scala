@@ -81,14 +81,14 @@ object IndexerOps extends QueryPack {
     * are excluded first — a single doc always fits). Too-large docs are
     * grouped under batch_id -1 (FailedTooLargeCount analog).
     *
-    * The greedy fold is inherently sequential, so it runs per
-    * count-bucket: buckets are bounded at `BatchDocCount` docs (a
-    * per-row `aggregate` over a collected ≤100-element array) and fold
-    * in parallel across the cluster. The one concession to distribution
-    * is that the byte accumulator restarts at each count-bucket
-    * boundary, where the reference's single sequential uploader carries
-    * it through — batch CONTENTS can differ at bucket seams, the
-    * flush-before-exceed invariant never does.
+    * The greedy rule is inherently sequential, so it runs per
+    * count-bucket: buckets are bounded at `BatchDocCount` docs, and
+    * [[Batching.greedy]] batches each bucket's sizes, sorted by upload
+    * order, in parallel across the cluster. The one concession to
+    * distribution is that the byte accumulator restarts at each
+    * count-bucket boundary, where the reference's single sequential
+    * uploader carries it through — batch CONTENTS can differ at bucket
+    * seams, the flush-before-exceed invariant never does.
     */
   def batchAssign(spark: SparkSession, dir: String): DataFrame = {
     val docs = mappedDocs(spark, dir).withColumn("doc_bytes", uploadDocBytes)
@@ -96,32 +96,25 @@ object IndexerOps extends QueryPack {
     // distributed global sequence (no single-task window) → count-capped runs
     val assigned = graft.functions.Ranks.globalRowNumber(kept, "pathbase64")
       .withColumn("cb", ((col("rn") - 1) / BatchDocCount).cast("long"))
-    // greedy byte-cap fold within each bucket, in upload (rn) order
-    val zero = struct(lit(0L).as("acc"), lit(0L).as("sub"),
-      array().cast("array<struct<sub_id:bigint,doc_bytes:bigint>>").as("out"))
-    val folded = assigned.groupBy(col("cb"))
-      .agg(array_sort(collect_list(struct(col("rn"), col("doc_bytes")))).as("ds"))
-      .select(col("cb"), explode(aggregate(col("ds"), zero,
-        (st, d) => {
-          val tryAcc = st.getField("acc") + d.getField("doc_bytes")
-          val cross = tryAcc > MaxBatchBytes
-          val sub = when(cross, st.getField("sub") + 1L).otherwise(st.getField("sub"))
-          val acc = when(cross, d.getField("doc_bytes")).otherwise(tryAcc)
-          struct(acc.as("acc"), sub.as("sub"),
-            concat(st.getField("out"),
-              array(struct(sub.as("sub_id"), d.getField("doc_bytes").as("doc_bytes")))).as("out"))
-        },
-        st => st.getField("out"))).as("e"))
-      .select(col("cb"), col("e.sub_id").as("sub_id"), col("e.doc_bytes").as("doc_bytes"))
     // composite id: sub_id < 1e6 provably (≤ BatchDocCount sub-batches
     // per bucket), so the encoding cannot collide across count buckets
-    val batches = folded.groupBy(col("cb"), col("sub_id"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("doc_bytes")).as("total_bytes"))
-      .select((col("cb") * 1000000L + col("sub_id")).as("batch_id"), col("n_docs"), col("total_bytes"))
+    val batches = assigned.groupBy(col("cb"))
+      .agg(transform(array_sort(collect_list(struct(col("rn"), col("doc_bytes")))),
+        d => d.getField("doc_bytes")).as("ds"))
+      .select(col("cb"), posexplode(greedyBatches(col("ds"))).as(Seq("sub_id", "b")))
+      .select((col("cb") * 1000000L + col("sub_id")).as("batch_id"),
+        col("b._1").as("n_docs"), col("b._2").as("total_bytes"))
     val rejected = docs.filter(tooLarge(col("numbervalue")))
       .agg(count(lit(1)).as("n_docs"), sum(col("doc_bytes")).as("total_bytes"))
       .select(lit(-1L).as("batch_id"), col("n_docs"), col("total_bytes"))
     batches.unionByName(rejected).filter(col("n_docs") > 0).orderBy(col("batch_id"))
+  }
+
+  /** One count bucket's doc sizes, in upload order → (n_docs,
+    * total_bytes) of each of its [[Batching.greedy]] batches, in order. */
+  private val greedyBatches = udf { (bytes: Seq[Long]) =>
+    Batching.greedy(bytes.iterator.map(b => (b, b)), BatchDocCount.toInt, MaxBatchBytes)._1
+      .map(b => (b.length.toLong, b.sum))
   }
 
   /** IndexerRunMetrics analog over one full run. */

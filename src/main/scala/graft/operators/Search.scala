@@ -109,7 +109,6 @@ object Search extends QueryPack {
     * postings, not the corpus.
     */
   def searchIsMatchTerms(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Analyzers
     val terms = "spark data join".toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSeq
     val matched = TextIndex.postingsStd(spark, dir)
       .filter(col("tok").isin(terms: _*))

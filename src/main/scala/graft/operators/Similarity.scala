@@ -151,16 +151,12 @@ object Similarity extends QueryPack {
     * so Σ pop² — the candidate join — is O(n^1.5), measured 19.3× cost
     * for 10× data at sf1. With the bound, Σ pop·min(pop,C) ≤ n·probes·C:
     * linear in the corpus with a constant quadratic factor. Build cost
-    * is O(n·2d) per round for the oversized population only (two seed
-    * distances per member), ~log2(4√n/C) rounds; the base k-means build
+    * is O(n·2d) per round for the oversized population only (a min and
+    * max per dimension), ~log2(4√n/C) rounds; the base k-means build
     * is shared (IndexCache) with the unbounded probes twin.
     */
   def boundedCellIndex(spark: SparkSession, dir: String, probes: Int,
       bound: Int = CellBound): DataFrame = {
-    // the base build resolves OUTSIDE the bounded entry's cache slot:
-    // ConcurrentHashMap.computeIfAbsent forbids reentrant insertion
-    // (hash-bin-dependent "Recursive update" — masked whenever an ANN
-    // query had already populated the kmeans slot)
     val (cells0, _) = cellIndex(spark, dir, probes)
     graft.sources.IndexCache.getOrBuild(spark, s"kmeans_bounded_p${probes}_b$bound", dir) {
       // exact-duplicate vectors collapse to their min-vec_id
@@ -264,20 +260,15 @@ object Similarity extends QueryPack {
   /** Brute-force top-k over int8-QUANTIZED codes — the 4× storage /
     * memory-bandwidth saver for 100 TB of embeddings (cosine is
     * scale-invariant, so per-vector symmetric quantization costs only
-    * the per-element rounding error). Quantization uses explicit
-    * floor(x/scale + 0.5) so both engines round identically; the codes
+    * the per-element rounding error). [[Vectors.quantizeInt8]] rounds by
+    * floor(x/scale + 0.5), so both engines round identically; the codes
     * are exact small integers, making the oracle math bit-stable.
     */
   def annInt8(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.Column
-    val xs = transform(col("embedding"), x => x.cast("double"))
-    val scale = (aggregate(xs, lit(0.0), (a, x) => greatest(a, abs(x))) / 127.0).as("scale")
-    def codes(sc: Column) = transform(col("embedding"),
-      x => floor(x.cast("double") / sc + 0.5)).as("c")
     val qz = Tables.parallelized(spark, Tables.embeddings(spark, dir), "vec_id")
-      .select(col("vec_id"), col("label"), col("embedding"), scale)
+      .select(col("vec_id"), col("label"), col("embedding"), Vectors.int8Scale(col("embedding")).as("scale"))
       .filter(col("scale") > 0)
-      .select(col("vec_id"), col("label"), codes(col("scale")))
+      .select(col("vec_id"), col("label"), Vectors.quantizeInt8(col("embedding"), col("scale")).as("c"))
     val q = qz.filter(col("vec_id") === QueryVecId).select(col("c").as("qc"))
     qz.filter(col("vec_id") =!= QueryVecId)
       .crossJoin(broadcast(q))
@@ -615,12 +606,11 @@ object Similarity extends QueryPack {
     * centroids with the map-side aggregate and appended to the cell
     * lists — never a full rebuild. At 100 TB this is the daily
     * operation of an embedding store: one broadcast of k centroids +
-    * one map-side aggregate over just the batch, then an append; cells
-    * whose population crosses a bound are re-split locally
-    * ([[resplitOversized]], spec-gated) rather than re-clustering the
-    * corpus. Probing the merged index is byte-identical to ann_ivf's
-    * probe. vec_id % 10 == 0 plays the incoming batch (the same split
-    * convention as dedup_incremental).
+    * one map-side aggregate over just the batch, then an append. The
+    * merged cells are not re-split: a cell grows with its batch
+    * assignments until the corpus index is rebuilt. Probing the merged
+    * index is byte-identical to ann_ivf's probe. vec_id % 10 == 0 plays
+    * the incoming batch (the same split convention as dedup_incremental).
     */
   def annIncremental(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
@@ -646,55 +636,6 @@ object Similarity extends QueryPack {
         round(Vectors.cosine(col("embedding"), col("qv")), 4).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(10)
-  }
-
-  /** Split every cell whose population exceeds `bound` into two
-    * children: one assignment round against two deterministic seed
-    * vectors (the cell's min- and max-vec_id members — no RNG), child
-    * ids = cell (near lo-seed) and cell + offset (near hi-seed), child
-    * centroids recomputed as member means. Cells at or under the bound
-    * are untouched, so the cost scales with the oversized population
-    * only — the maintenance op that keeps probe cost bounded as an
-    * incrementally-grown index drifts. The assignment is the same
-    * map-side min(struct) as everywhere else. At scale the caller
-    * iterates to a fixpoint; one round halves the worst cell.
-    */
-  private[graft] def resplitOversized(cells: DataFrame, centroids: DataFrame,
-      e: DataFrame, bound: Long): (DataFrame, DataFrame) = {
-    val pops = cells.groupBy(col("cell")).agg(count(lit(1)).as("pop"))
-    val over = pops.filter(col("pop") > bound).select(col("cell"))
-    // scalar read of a k-row aggregate frame (like the watermark read)
-    val offset = centroids.agg(max(col("cell"))).first().getInt(0) + 1
-    val members = cells.join(broadcast(over), Seq("cell"))
-      .join(e, Seq("vec_id"))
-      .select(col("cell"), col("vec_id"), col("embedding"))
-    val bounds = members.groupBy(col("cell"))
-      .agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi"))
-    val seedVecs = bounds
-      .join(e.select(col("vec_id").as("lo"), col("embedding").as("lov")), Seq("lo"))
-      .join(e.select(col("vec_id").as("hi"), col("embedding").as("hiv")), Seq("hi"))
-      .select(col("cell"), explode(array(
-        struct(lit(0).as("side"), transform(col("lov"), x => x.cast("double")).as("centroid")),
-        struct(lit(1).as("side"), transform(col("hiv"), x => x.cast("double")).as("centroid")))).as("s"))
-      .select(col("cell"), col("s.side").as("side"), col("s.centroid").as("centroid"))
-    val reassigned = members.join(broadcast(seedVecs), Seq("cell"))
-      .withColumn("d2", centroidD2)
-      .groupBy(col("vec_id"), col("cell"))
-      .agg(min(struct(col("d2"), col("side"))).as("mc"))
-      .select(col("vec_id"),
-        (col("cell") + col("mc.side") * offset).cast("int").as("cell"))
-    val keptCells = cells.join(broadcast(over), Seq("cell"), "left_anti")
-      .select(col("vec_id"), col("cell"))
-    val newCells = keptCells.union(reassigned)
-    val childCentroids = reassigned.join(e, Seq("vec_id"))
-      .select(col("cell"), posexplode(transform(col("embedding"), x => x.cast("double"))).as(Seq("dim", "x")))
-      .groupBy(col("cell"), col("dim")).agg(avg(col("x")).as("m"))
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-      .select(col("cell"), transform(col("dm"), s => s.getField("m")).as("centroid"))
-    val keptCentroids = centroids.join(broadcast(over), Seq("cell"), "left_anti")
-      .select(col("cell"), col("centroid"))
-    (newCells, keptCentroids.union(childCentroids))
   }
 
   /** Deterministic Lloyd's k-means over the embedding column: initial

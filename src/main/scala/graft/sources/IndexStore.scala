@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileContext, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -34,10 +34,9 @@ final case class MergeResult(created: Long, modified: Long, failed: Long, versio
   * `compact` deletes it, so the store resolves the newest version once
   * (analysis and file listing) and every later read or merge of it
   * reuses that frame; an unchanged store's read costs only the marker
-  * glob. Racing writers are not coordinated: two merges on the same
-  * base both write `v=N+1`, and one can replace the other — breaking
-  * that invariant for the resolved frame too. At cluster scale the merge
-  * shuffles snapshot and batch once, on the key.
+  * glob. Two writers on the same base both pick `v=N+1`; exactly one
+  * commits it and the other fails (see `writeObserving`). At cluster
+  * scale the merge shuffles snapshot and batch once, on the key.
   *
   * Every write's counts are `observe(...)` aggregates of the write job
   * itself, taken by a listener on the written frame's own session (see
@@ -99,6 +98,13 @@ class IndexStore(spark: SparkSession, root: String, keyCol: String,
     * observation must be the top of `df`: AQE drops the subtree under
     * an exchange that turns out empty, observations included.
     *
+    * The write and its marker land in a private `_attempt-<uuid>`
+    * directory under the root, published by one rename to `v=N` that
+    * fails if `v=N` exists: of two writers that both picked `v=N`, the
+    * later one deletes its attempt and throws, and the committed `v=N`
+    * is never touched. It does not retry on the new base: only the
+    * caller knows whether re-running its batch plan is safe.
+    *
     * The listener is registered on `df.sparkSession`, the session the
     * write executes in: a QueryExecutionListener hears only executions
     * of the session it is registered on, and inside a streaming
@@ -117,26 +123,33 @@ class IndexStore(spark: SparkSession, root: String, keyCol: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
     }
+    val attempt = new Path(root, s"_attempt-${java.util.UUID.randomUUID()}")
+    val fs = hadoopFs
     val session = df.sparkSession
     session.listenerManager.register(listener)
-    val metrics = try {
-      val writer = df.write.mode(SaveMode.Overwrite)
-      partitionCol.fold(writer)(c => writer.partitionBy(c)).parquet(dir(v))
-      try observed.get(60, java.util.concurrent.TimeUnit.SECONDS)
-      catch { case _: java.util.concurrent.TimeoutException =>
-        throw new IllegalStateException(s"no observed metrics for ${dir(v)}: left uncommitted") }
-    } finally session.listenerManager.unregister(listener)
-    val (part, data) = df.schema.fields.partition(f => partitionCol.contains(f.name))
-    val schema = StructType(data ++ part)
-    // published by a rename that fails if the marker exists: a reader
-    // globbing a marker still being written would parse an empty file
-    val tmp = new Path(dir(v), "_graft_commit.tmp")
-    val out = hadoopFs.create(tmp, true)
-    try out.write(schema.json.getBytes(UTF_8)) finally out.close()
-    FileContext.getFileContext(hadoopFs.getUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, marker(v))
-    resolve(v, schema)
-    metrics
+    try {
+      val metrics = try {
+        val writer = df.write
+        partitionCol.fold(writer)(c => writer.partitionBy(c)).parquet(attempt.toString)
+        try observed.get(60, java.util.concurrent.TimeUnit.SECONDS)
+        catch { case _: java.util.concurrent.TimeoutException =>
+          throw new IllegalStateException(s"no observed metrics for ${dir(v)}: left uncommitted") }
+      } finally session.listenerManager.unregister(listener)
+      val (part, data) = df.schema.fields.partition(f => partitionCol.contains(f.name))
+      val schema = StructType(data ++ part)
+      val out = fs.create(new Path(attempt, marker(v).getName), false)
+      try out.write(schema.json.getBytes(UTF_8)) finally out.close()
+      try FileContext.getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
+        .rename(attempt, new Path(dir(v)))
+      catch { case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        throw new IllegalStateException(
+          s"${dir(v)} was committed by another writer: this write was not applied", e) }
+      resolve(v, schema)
+      metrics
+    } catch { case e: Throwable =>
+      fs.delete(attempt, true)
+      throw e
+    }
   }
 
   /** Unwrap an observed aggregate (null on zero rows → 0). */

@@ -85,7 +85,7 @@ object TextIndex {
 
   /** The snapshot's whitespace dictionary (tok, df, occurrences). */
   def vocabWs(spark: SparkSession, dir: String): DataFrame = {
-    val p = postingsWs(spark, dir) // resolve before entering the cache slot (no reentrant computeIfAbsent)
+    val p = postingsWs(spark, dir)
     IndexCache.getOrBuild(spark, "text_vocab_ws", dir) {
       vocabOf(p).pin()
     }
@@ -118,7 +118,7 @@ object TextIndex {
     * only its terms' prefix directories.
     */
   def postingsStdPersisted(spark: SparkSession, dir: String): DataFrame = {
-    val built = postingsStd(spark, dir) // resolve before entering the cache slot (no reentrant computeIfAbsent)
+    val built = postingsStd(spark, dir)
     IndexCache.getOrBuild(spark, "text_postings_std_disk", dir) {
       byPrefix(spark, built, dir, "postings_std", Seq("tok"))
     }
@@ -148,7 +148,7 @@ object TextIndex {
     * disk — the durable Lucene-segment shape of [[postingsPosStd]].
     */
   def postingsPosStdPersisted(spark: SparkSession, dir: String): DataFrame = {
-    val built = postingsPosStd(spark, dir) // resolve outside the cache slot
+    val built = postingsPosStd(spark, dir)
     IndexCache.getOrBuild(spark, "text_postings_pos_std_disk", dir) {
       byPrefix(spark, built, dir, "postings_pos_std", Seq("tok", "doc_id", "pos"))
     }

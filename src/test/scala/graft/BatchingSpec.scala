@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Batching
-import org.apache.spark.sql.functions._
 
 /** Mirrors the reference's own test suite behaviors
   * (reference: AzureSearchIndexerTests/BatchingUploaderTests.cs,
@@ -66,22 +65,5 @@ class BatchingSpec extends SparkSpec {
     // would cross it starts the next batch
     assert(real.forall(_.getAs[Long]("total_bytes") <= graft.operators.IndexerOps.MaxBatchBytes),
       "a batch exceeded MaxBatchBytes: flush-before-exceed violated")
-  }
-
-  test("distributed assignment respects both caps within every partition") {
-    val df = Tables.documents(spark, sf)
-      .select(col("doc_id"), col("n_chars").cast("long").as("bytes"))
-      .repartition(4)
-    val assigned = Batching.assign(df, "bytes", maxCount = 10, maxBytes = 2000L)
-    val rows = assigned.collect()
-    assert(rows.length == Tables.documents(spark, sf).count())
-    val grouped = rows.filter(!_.getAs[Boolean]("too_large"))
-      .groupBy(r => (r.getAs[Int]("part_id"), r.getAs[Long]("batch_id")))
-    grouped.foreach { case (_, batch) =>
-      assert(batch.length <= 10)
-      assert(batch.map(_.getAs[Long]("bytes")).sum <= 2000L)
-    }
-    // too-large docs are excluded from batches
-    assert(rows.filter(_.getAs[Boolean]("too_large")).forall(_.getAs[Long]("batch_id") == -1L))
   }
 }

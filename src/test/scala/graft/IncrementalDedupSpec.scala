@@ -16,6 +16,13 @@ class IncrementalDedupSpec extends SparkSpec {
     val first = docs.filter(col("doc_id") < half)
     val c0 = Dedup.incrementalCandidates(spark, first, store)
     assert(c0.count() == 0) // empty index → no candidates
+    // the store holds the batch's bands as the snapshot pipeline builds them
+    def bandRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, String)] =
+      df.select("doc_id", "band", "sig").collect()
+        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("band"), r.getAs[String]("sig"))).toSeq.sorted
+    val snapshotBands = Dedup.lshBands(spark, sf)
+    assert(bandRows(store.read().get).nonEmpty)
+    assert(bandRows(store.read().get) == bandRows(snapshotBands.filter(col("doc_id") < half)))
 
     // second half arrives incrementally
     val second = docs.filter(col("doc_id") >= half)
@@ -30,8 +37,9 @@ class IncrementalDedupSpec extends SparkSpec {
 
     assert(inc == crossing, s"inc=$inc expected=$crossing")
 
-    // the band index now covers both halves
+    // the band index now covers both halves, with the snapshot's rows
     assert(store.read().get.select("doc_id").distinct().count() ==
       docs.filter(length(col("text")) > 0).count())
+    assert(bandRows(store.read().get) == bandRows(snapshotBands))
   }
 }

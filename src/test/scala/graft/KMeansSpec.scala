@@ -155,37 +155,6 @@ class KMeansSpec extends SparkSpec {
     assert(merged.size == e.count())
   }
 
-  test("resplitOversized splits only oversized cells, preserves membership, bounds children") {
-    val e = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
-    // k=4 forces large cells so a bound at half the max population
-    // guarantees at least one split
-    val (cells0, cents) = Similarity.kmeansOn(e, k = 4, iters = 1, probes = 1)
-    val cells = cells0.select(col("vec_id"), col("cell"))
-    val pops = cells.groupBy(col("cell")).count().collect()
-      .map(r => r.getAs[Int]("cell") -> r.getAs[Long]("count")).toMap
-    val bound = pops.values.max / 2
-    assert(pops.values.exists(_ > bound))
-    val (nc, ncents) = Similarity.resplitOversized(cells, cents, e, bound)
-    val npops = nc.groupBy(col("cell")).count().collect()
-      .map(r => r.getAs[Int]("cell") -> r.getAs[Long]("count")).toMap
-    val offset = cents.agg(max(col("cell"))).head().getInt(0) + 1
-    // membership preserved exactly (no vector lost or duplicated)
-    assert(nc.count() == cells.count())
-    assert(nc.select(col("vec_id")).distinct().count() == cells.count())
-    pops.foreach { case (c, p) =>
-      if (p <= bound) assert(npops.get(c).contains(p), s"untouched cell $c changed")
-      else {
-        val lo = npops.getOrElse(c, 0L)
-        val hi = npops.getOrElse(c + offset, 0L)
-        assert(lo + hi == p, s"split of cell $c lost members")
-        assert(lo > 0 && hi > 0 && lo < p && hi < p, s"split of cell $c degenerate: $lo/$hi")
-      }
-    }
-    // every surviving cell has a centroid, and vice versa
-    val centCells = ncents.select(col("cell")).collect().map(_.getInt(0)).toSet
-    assert(centCells == npops.keySet)
-  }
-
   test("filtered ANN returns only label-1 vectors, ranked by cosine") {
     val rows = Similarity.annFiltered(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 10)

@@ -4,6 +4,7 @@ import graft.sources.{DocumentSource, IndexStore}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class SourcesSpec extends SparkSpec {
 
@@ -332,7 +333,7 @@ class SourcesSpec extends SparkSpec {
     import spark.implicits._
     store.mergeOrUpload(Seq(("seed", 0L)).toDF("key", "n"))
     // each of the batch's four partitions stalls on its first row, which
-    // holds the write job — and its v=1 directory — open for seconds
+    // holds the write job — and its attempt directory — open for seconds
     val stall = udf { (n: Long) => if (n % 50000 == 0) Thread.sleep(2000); n }
     val big = spark.range(0, 200000, 1, 4).select(col("id").cast("string").as("key"), stall(col("id")).as("n"))
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
@@ -343,7 +344,7 @@ class SourcesSpec extends SparkSpec {
     var polls = 0
     var sawInFlight = false
     while (writer.isAlive) {
-      val inFlight = new java.io.File(s"$root/v=1").exists()
+      val inFlight = new java.io.File(root).list().exists(_.startsWith("_attempt-"))
       val v = reader.currentVersion
       val n = reader.read().get.count()
       assert(v.contains(0L) || v.contains(1L), s"version $v")
@@ -440,5 +441,61 @@ class SourcesSpec extends SparkSpec {
     assert(failure.get() == null, s"a read failed after ${reads.get()} reads: ${failure.get()}")
     assert(reader.read().get.count() == 21)
   }
+
+  test("IndexStore: of two writers racing for one version, exactly one commits it") {
+    import spark.implicits._
+    val root = tempDir("graft_idx_race").toString
+    val a = new IndexStore(spark, root, "key")
+    val b = new IndexStore(spark, root, "key")
+    a.mergeOrUpload(Seq(("seed", "s")).toDF("key", "w"))
+    assert(a.currentVersion.contains(0L) && b.currentVersion.contains(0L))
+    WriteGate.reset()
+    // writer A's batch blocks inside its write job until released, so B
+    // commits v=1 while A's files are being written
+    val gate = udf { (id: Long) => WriteGate.hold(); id }
+    def batch(w: String, key: org.apache.spark.sql.Column) =
+      spark.range(0, 100, 1, 2).select(concat(lit("k"), key.cast("string")).as("key"), lit(w).as("w"))
+    val outcomes = new java.util.concurrent.ConcurrentHashMap[String, Either[Throwable, Long]]()
+    def write(w: String, store: IndexStore, key: org.apache.spark.sql.Column): Unit =
+      outcomes.put(w, scala.util.Try(store.mergeOrUpload(batch(w, key)).version).toEither): Unit
+    val writerA = new Thread(() => write("a", a, gate(col("id"))))
+    writerA.start()
+    try {
+      assert(WriteGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "writer A never reached its write job")
+      write("b", b, col("id"))
+    } finally WriteGate.release.countDown()
+    writerA.join()
+
+    val won = outcomes.asScala.collect { case (w, Right(v)) => w -> v }
+    assert(won.size == 1, s"outcomes: $outcomes")
+    val (winner, v) = won.head
+    assert(v == 1L)
+    val lost = outcomes.asScala.collect { case (_, Left(e)) => e }.toSeq
+    assert(lost.size == 1 && lost.head.getMessage.contains("v=1"), s"loser's error: $lost")
+    val fresh = new IndexStore(spark, root, "key")
+    assert(fresh.currentVersion.contains(1L))
+    val rows = fresh.read().get.collect().map(r => r.getAs[String]("key") -> r.getAs[String]("w")).toSeq
+    assert(rows.map(_._1).distinct.size == rows.size, "duplicate keys in the committed snapshot")
+    assert(rows.sorted == (("seed" -> "s") +: (0 until 100).map(i => s"k$i" -> winner)).sorted)
+    assert(new java.io.File(root).list().sorted.sameElements(Array("v=0", "v=1")),
+      "the losing attempt was left behind")
+  }
 }
 
+/** Latches a blocking UDF reaches from the executor threads of a local
+  * master (one JVM), so a spec can hold a write job at a known point. */
+object WriteGate {
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+
+  def reset(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
+  }
+
+  def hold(): Unit = {
+    entered.countDown()
+    release.await(60, java.util.concurrent.TimeUnit.SECONDS): Unit
+  }
+}
