@@ -57,8 +57,14 @@ object IndexCache {
   implicit final class Pin(private val df: DataFrame) extends AnyVal {
     def pin(): DataFrame = {
       val sc = df.sparkSession.sparkContext
-      if (reliablePin(sc.getCheckpointDir, sc.isLocal)) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+      if (reliablePin(sc.getCheckpointDir, sc.isLocal)) {
+        // Spark never deletes reliable checkpoint files of live RDDs:
+        // the context's checkpoint directory goes at JVM exit, as a
+        // scratch root does
+        val ck = new Path(sc.getCheckpointDir.get)
+        ck.getFileSystem(sc.hadoopConfiguration).deleteOnExit(ck)
+        df.checkpoint(eager = true)
+      } else df.localCheckpoint(eager = true)
     }
   }
 

@@ -185,15 +185,16 @@ object StreamingOps extends QueryPack {
       .join(index, Seq(keyCol), "left")
 
   /** The reference's event-driven indexing loop in Structured Streaming
-    * form: EventGrid envelope JSON streams in as (event_id, envelope);
-    * each micro-batch parses the full envelope schema once, counts dead
-    * letters and live events in one small aggregate, reduces to the
-    * LATEST action per key (a create and a delete of the same path in
-    * one batch resolve by eventTime, then event_id), and commits ONE
-    * snapshot: BlobCreated/Modified rows upsert the path index and
-    * BlobDeleted rows ride the same merge as tombstones (reference:
-    * DatalakePathIndexerFunc/PathIndexerFunc.cs:18-60, the service-bus
-    * trigger doing exactly this per message batch).
+    * form: EventGrid envelope JSON streams in as (event_id, envelope),
+    * and each micro-batch is ONE merge action that commits one
+    * snapshot. The merge parses each envelope once, rejects dead
+    * letters (an envelope with no blob url has no key) and counts them
+    * as its failed rows, keeps the LATEST action per key (a create and a
+    * delete of the same path in one batch resolve by eventTime, then
+    * event_id, as the merge's within-batch order), upserts
+    * BlobCreated/Modified rows and applies BlobDeleted rows as
+    * tombstones (reference: DatalakePathIndexerFunc/PathIndexerFunc.cs:18-60,
+    * the service-bus trigger doing exactly this per message batch).
     *
     * @param metrics optional per-batch metrics sink counting malformed
     *   envelopes (the reference's caught deserialization failures) —
@@ -214,28 +215,17 @@ object StreamingOps extends QueryPack {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         metrics.foreach(_.noteBatch(batchId))
-        val parsed = graft.operators.PathIndexOps.parseBlobEnvelopes(batch).persist()
-        try {
-          val dead = col("action") === "dead-letter"
-          val n = parsed.agg(count_if(dead), count_if(!dead)).head()
-          metrics.foreach(_.recordDeadLetters(batchId, n.getLong(0)))
-          if (n.getLong(1) > 0) {
-            // eventTime compares as a TIMESTAMP: lexicographic strings
-            // misorder mixed fractional precision ("…01Z" vs "…01.5Z")
-            // and non-Z offsets, which could resurrect a deleted blob
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("key"))
-              .orderBy(to_timestamp(col("eventTime")).desc, col("event_id").desc)
-            val latest = parsed.filter(!dead)
-              .withColumn("_rn", row_number().over(w))
-              .filter(col("_rn") === 1)
-              .select(col("key"), col("filesystem"), col("pathUrlEncoded"),
-                col("eTag"), col("contentLength"), col("eventTime"),
-                (col("action") === "tombstone").as("_tombstone"))
-            store.mergeOrUpload(latest, tombstone = Some("_tombstone"))
-          }
-        } finally { parsed.unpersist(); () }
-        ()
+        val parsed = graft.operators.PathIndexOps.parseBlobEnvelopes(batch)
+        // eventTime compares as a TIMESTAMP: lexicographic strings
+        // misorder mixed fractional precision ("…01Z" vs "…01.5Z") and
+        // non-Z offsets, which could resurrect a deleted blob
+        val r = store.mergeOrUpload(
+          parsed.select(col("key"), col("filesystem"), col("pathUrlEncoded"),
+            col("eTag"), col("contentLength"), col("eventTime"),
+            (col("action") === "tombstone").as("_tombstone"),
+            struct(to_timestamp(col("eventTime")), col("event_id")).as("_at")),
+          reject = Some(col("key").isNull), tombstone = Some("_tombstone"), seq = Some("_at"))
+        metrics.foreach(_.recordDeadLetters(batchId, r.failed))
       }
       .start()
 

@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.Files
 
 import graft.sources.{DocumentSource, IndexCache}
+import graft.sources.IndexCache.Pin
 import org.apache.spark.sql.DataFrame
 
 /** The one pinning primitive ([[IndexCache.Pin]]) and the one layout
@@ -63,6 +64,25 @@ class PinSpec extends SparkSpec {
     assert(e.getMessage.contains("SparkContext.setCheckpointDir"))
     assert(IndexCache.scratchBase(Some("hdfs:///ck/1"), isLocal = false) == "hdfs:///ck/1")
     assert(IndexCache.scratchBase(None, isLocal = true) == "/tmp")
+  }
+
+  test("a reliable pin registers the checkpoint directory for deletion at JVM exit") {
+    // a directory the spec does not delete itself: Spark never deletes
+    // the checkpoint files of live RDDs, so only the pin's registration
+    // removes them
+    val parent = Files.createTempDirectory("graft_pin_exit")
+    val sc = spark.sparkContext
+    try {
+      sc.setCheckpointDir(parent.toString)
+      val ck = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
+      val fs = ck.getFileSystem(sc.hadoopConfiguration)
+      assert(spark.range(0, 10, 1, 2).toDF("n").pin().collect().length == 10)
+      assert(files(new File(ck.toUri.getPath)).exists(_.getParentFile.getName.startsWith("rdd-")))
+      assert(fs.cancelDeleteOnExit(ck), s"the pin left $ck to outlive the JVM")
+      fs.deleteOnExit(ck)
+      fs.deleteOnExit(new org.apache.hadoop.fs.Path(parent.toUri))
+    } finally sc.setCheckpointDir(null)
+    assert(sc.getCheckpointDir.isEmpty)
   }
 
   test("reliable pins under a checkpoint directory give the local answers") {
