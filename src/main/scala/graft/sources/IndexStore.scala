@@ -1,7 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{FileContext, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -149,11 +149,11 @@ class IndexStore(spark: SparkSession, root: String, keyCol: String,
     * an exchange that turns out empty, observations included.
     *
     * The write and its marker land in a private `_attempt-<uuid>`
-    * directory under the root, published by one rename to `v=N` that
-    * fails if `v=N` exists: of two writers that both picked `v=N`, the
-    * later one deletes its attempt and throws, and the committed `v=N`
-    * is never touched. It does not retry on the new base: only the
-    * caller knows whether re-running its batch plan is safe.
+    * directory under the root, published to `v=N` by [[IndexStore.publish]]:
+    * of two writers that both picked `v=N`, exactly one commits it, the
+    * other deletes its attempt and throws, and the committed `v=N`'s
+    * files are never touched. It does not retry on the new base: only
+    * the caller knows whether re-running its batch plan is safe.
     *
     * The listener is registered on `df.sparkSession`, the session the
     * write executes in: a QueryExecutionListener hears only executions
@@ -187,14 +187,10 @@ class IndexStore(spark: SparkSession, root: String, keyCol: String,
           throw new IllegalStateException(s"no observed metrics for ${dir(v)}: left uncommitted") }
       } finally session.listenerManager.unregister(listener)
       val (part, data) = df.schema.fields.partition(f => partitionCol.contains(f.name))
-      val m = commit(StructType(data ++ part), metrics)
+      val m = commit(StructType(data ++ part), metrics).copy(attempt = Some(attempt.getName))
       val out = fs.create(new Path(attempt, Marker), false)
       try out.write(m.toJson) finally out.close()
-      try FileContext.getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
-        .rename(attempt, new Path(dir(v)))
-      catch { case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"${dir(v)} was committed by another writer: this write was not applied", e) }
+      publish(fs, attempt, new Path(dir(v)))
       resolve(v, m)
       metrics
     } catch { case e: Throwable =>
@@ -377,19 +373,43 @@ object IndexStore {
 
   private val Json = new ObjectMapper()
 
+  /** Publish `attempt`, a finished write holding a marker that names the
+    * attempt, as `target` by one rename, and throw unless `target` then
+    * holds this attempt. The rename fails when `target` exists, except on
+    * the local filesystem: it checks for `target`, then renames, and
+    * when another writer's `target` appears in between, it copies the
+    * attempt INTO that `target` and reports success. So the marker at
+    * `target` decides, on every filesystem: a writer whose attempt it
+    * does not name lost the race, deletes its nested copy and throws.
+    */
+  private[graft] def publish(fs: FileSystem, attempt: Path, target: Path): Unit = {
+    def lost(cause: Throwable) = new IllegalStateException(
+      s"$target was committed by another writer: this write was not applied", cause)
+    try FileContext.getFileContext(fs.getUri, fs.getConf).rename(attempt, target)
+    catch { case e: FileAlreadyExistsException => throw lost(e) }
+    val in = fs.open(new Path(target, Marker))
+    val committed = try Json.readTree(in).path("attempt").asText() finally in.close()
+    if (committed != attempt.getName) {
+      fs.delete(new Path(target, attempt.getName), true)
+      throw lost(null)
+    }
+  }
+
   /** A committed version's marker: the schema a read returns, the
-    * version whose files hold the base, the base's row count, and the
-    * keys (cast to string) upserted or deleted since the base. A base
-    * is its own base with no keys. A marker that holds only a schema,
-    * as older code wrote it, reads as a base of unknown size.
+    * version whose files hold the base, the base's row count, the keys
+    * (cast to string) upserted or deleted since the base, and the
+    * attempt directory that wrote it (see [[publish]]). A base is its
+    * own base with no keys. A marker that holds only a schema, as older
+    * code wrote it, reads as a base of unknown size.
     */
   private[sources] final case class Manifest(schema: StructType, base: Long, baseRows: Option[Long],
-                                             keys: Set[String]) {
+                                             keys: Set[String], attempt: Option[String] = None) {
     def toJson: Array[Byte] = {
       val o = Json.createObjectNode()
       o.set[JsonNode]("schema", Json.readTree(schema.json))
       o.put("base", base)
       baseRows.foreach(n => o.put("baseRows", n))
+      attempt.foreach(a => o.put("attempt", a))
       val ks = o.putArray("keys")
       keys.toSeq.sorted.foreach(k => ks.add(k))
       Json.writeValueAsBytes(o)

@@ -58,18 +58,20 @@ class IndexStoreDeltaSpec extends SparkSpec {
     var pages = Seq.empty[Seq[Row]]
     val jobs = jobsDuring { pages = Search.pagedByKey(live, "key", 100).toSeq }
     assert(pages.size == 11)
-    assert(jobs.size == pages.size, s"${jobs.size} jobs for ${pages.size} pages: $jobs")
+    // a fetch holds ten pages: one full fetch, then one of 19 rows
+    val fetch = 100 * Search.FetchPages
+    assert(jobs.size == 2, s"${jobs.size} jobs for ${pages.size} pages: $jobs")
     assert(pages.flatten.map(r => (r.getAs[String]("key"), r.getAs[Long]("n"), r.getAs[String]("fs")))
       == expected)
 
-    // each page's own plan: one scan of the base's and the delta's files
+    // each fetch's own plan: one scan of the base's and the delta's files
     // under one top-k, with no exchange of any kind and no join
-    (None +: pages.init.map(p => Some(p.last.getAs[String]("key")))).foreach { last =>
-      val page = last.fold(live)(k => live.filter(col("key") > k)).orderBy(col("key")).limit(100)
+    Seq(None, Some(pages.flatten.apply(fetch - 1).getAs[String]("key"))).foreach { last =>
+      val page = last.fold(live)(k => live.filter(col("key") > k)).orderBy(col("key")).limit(fetch)
       val plan = page.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange") && !plan.contains("Join"), s"page after $last:\n$plan")
-      assert(plan.split("FileScan").length == 2, s"page after $last is not one scan:\n$plan")
-      assert(plan.contains("NOT IN <"), s"page after $last reads no delta:\n$plan")
+      assert(!plan.contains("Exchange") && !plan.contains("Join"), s"fetch after $last:\n$plan")
+      assert(plan.split("FileScan").length == 2, s"fetch after $last is not one scan:\n$plan")
+      assert(plan.contains("NOT IN <"), s"fetch after $last reads no delta:\n$plan")
     }
   }
 

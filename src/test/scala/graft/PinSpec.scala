@@ -12,7 +12,9 @@ import org.apache.spark.sql.DataFrame
   * pin and every derived on-disk index of the engine goes through them,
   * their checkpoint-directory branch answers like the local one and
   * writes under that directory, and a cluster with no checkpoint
-  * directory can neither pin nor place files.
+  * directory can neither pin nor place files. Parquet tables are read
+  * through [[Tables.load]], whose schema cache spares a footer job per
+  * read.
   */
 class PinSpec extends SparkSpec {
 
@@ -47,6 +49,17 @@ class PinSpec extends SparkSpec {
     val stray = for {
       f <- sources if f.getName != "IndexCache.scala" && f.getName != "GenData.scala"
       (l, i) <- lines(f).zipWithIndex if placement(l)
+    } yield s"${f.getPath}:${i + 1}: ${l.trim}"
+    assert(stray.isEmpty, stray.mkString("\n"))
+  }
+
+  test("src/main reads parquet with its schema given, outside Tables and GenData") {
+    val sources = files(new File("src/main/scala")).filter(_.getName.endsWith(".scala"))
+    assert(sources.size > 20)
+    // an inferring read runs a footer job per read; Tables.load caches it
+    val stray = for {
+      f <- sources if f.getName != "Tables.scala" && f.getName != "GenData.scala"
+      (l, i) <- lines(f).zipWithIndex if l.contains(".read.parquet(") && !l.contains(".schema(")
     } yield s"${f.getPath}:${i + 1}: ${l.trim}"
     assert(stray.isEmpty, stray.mkString("\n"))
   }

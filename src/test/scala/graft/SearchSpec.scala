@@ -192,10 +192,9 @@ class SearchSpec extends SparkSpec {
   }
 
   test("keyset pagination: key-gt resume and empty-page termination at an exact boundary") {
-    // 3 exactly-full pages: the loop (like PathIndexClient.cs:64-91,
-    // which runs at page size 5000 while pages keep coming) cannot know
-    // it is done after page 3 — it must probe a 4th, get the EMPTY
-    // page, and terminate without emitting it
+    // 3 exactly-full pages (like PathIndexClient.cs:64-91, which runs at
+    // page size 5000 while pages keep coming): the listing ends after
+    // page 3 without emitting an empty page
     val df = spark.range(300).selectExpr("lpad(cast(id as string), 6, '0') as key")
     val pages = Search.pagedByKey(df, "key", pageSize = 100).toSeq
     assert(pages.length == 3 && pages.forall(_.size == 100))
@@ -209,7 +208,8 @@ class SearchSpec extends SparkSpec {
     assert(keys.sameElements(keys.sorted))
   }
 
-  test("keyset pagination: one job per returned page, a probe only after a full last page") {
+  test("keyset pagination: one job per fetch of pages, a probe only after a full last fetch") {
+    val fetch = 100 * Search.FetchPages
     def listing(n: Int, keep: org.apache.spark.sql.Column = lit(true)): (Int, Int) = {
       val df = spark.range(n).selectExpr("lpad(cast(id as string), 6, '0') as key").filter(keep)
       var pages = Seq.empty[Seq[String]]
@@ -220,11 +220,14 @@ class SearchSpec extends SparkSpec {
       assert(pages == fresh, s"$n keys")
       (pages.length, jobs.length)
     }
-    // a short last page ends the listing
-    assert(listing(250) == (3, 3))
-    // an exact multiple of the page size still probes once
-    assert(listing(300) == (3, 4))
+    // a short fetch ends the listing, on a short last page or a full one
+    assert(listing(250) == (3, 1))
+    assert(listing(300) == (3, 1))
     assert(listing(300, col("key") > "999999") == (0, 1))
+    // exactly one full fetch: a second fetch probes and finds nothing
+    assert(listing(fetch) == (Search.FetchPages, 2))
+    // one row past it: the second fetch holds the last, one-row page
+    assert(listing(fetch + 1) == (Search.FetchPages + 1, 2))
   }
 
   test("analyzed multi-term ismatch: all terms must occur, analysis is shared") {

@@ -481,6 +481,39 @@ class SourcesSpec extends SparkSpec {
     assert(new java.io.File(root).list().sorted.sameElements(Array("v=0", "v=1")),
       "the losing attempt was left behind")
   }
+
+  test("IndexStore: publishes released together onto one version commit exactly one attempt") {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(tempDir("graft_idx_publish").toUri)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def names(p: Path) = fs.listStatus(p).map(_.getPath.getName).filterNot(_.startsWith(".")).sorted.toSeq
+    def attempt(): Path = {
+      val a = new Path(root, s"_attempt-${java.util.UUID.randomUUID()}")
+      val out = fs.create(new Path(a, "_graft_commit"), false)
+      try out.write(s"""{"attempt":"${a.getName}"}""".getBytes("UTF-8")) finally out.close()
+      fs.create(new Path(a, "part-0.parquet"), false).close()
+      a
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try (0 until 400).foreach { v =>
+      val target = new Path(root, s"v=$v")
+      val attempts = Seq(attempt(), attempt())
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val outcomes = attempts.map(a => pool.submit(() => { start.await(); scala.util.Try(IndexStore.publish(fs, a, target)) }))
+        .map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      // the loser's own attempt goes, as a writer's failed write does
+      attempts.zip(outcomes).foreach { case (a, o) => if (o.isFailure) fs.delete(a, true) }
+      assert(outcomes.count(_.isSuccess) == 1, s"v=$v: $outcomes")
+      outcomes.foreach(_.failed.foreach(e =>
+        assert(e.getMessage.contains("committed by another writer"), s"v=$v: $e")))
+      // v=N holds the winner's files and marker alone, no nested attempt
+      assert(names(target) == Seq("_graft_commit", "part-0.parquet"), s"v=$v")
+      val in = fs.open(new Path(target, "_graft_commit"))
+      val marker = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      assert(marker.contains(attempts(outcomes.indexWhere(_.isSuccess)).getName), s"v=$v: $marker")
+    } finally pool.shutdownNow()
+    assert(names(root) == (0 until 400).map(v => s"v=$v").sorted, "an attempt was left behind")
+  }
 }
 
 /** Latches a blocking UDF reaches from the executor threads of a local

@@ -50,6 +50,36 @@ class TablesSpec extends SparkSpec {
     assert(normalized(s"$base/ltz") == expected)
   }
 
+  test("a table's inferred schema is cached until its files change") {
+    import spark.implicits._
+    val dir = tempDir("graft_tables_schema").toString
+    def docs(df: org.apache.spark.sql.DataFrame, mode: String) =
+      df.coalesce(1).write.mode(mode).parquet(s"$dir/documents.parquet")
+
+    // an unchanged table: the second read runs no job
+    docs(Seq((1L, "a")).toDF("doc_id", "text"), "overwrite")
+    assert(Tables.documents(spark, dir).count() == 1)
+    val again = jobsDuring { Tables.documents(spark, dir); () }
+    assert(again.isEmpty, s"a read of an unchanged table ran jobs: $again")
+
+    // a file appended to events.parquet is seen, and infers again once
+    writeEvents(dir, timestamp_micros(col("us")))
+    assert(normalized(dir).size == 2)
+    Seq((3L, usB + 1L, 12L, "view", 3.0, "{}")).toDF("event_id", "us", "user_id", "event_type", "value", "props")
+      .withColumn("ts", timestamp_micros(col("us")))
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.mode("append").parquet(s"$dir/events.parquet")
+    assert(jobsDuring { Tables.events(spark, dir); () }.nonEmpty, "an appended table read a cached schema")
+    assert(normalized(dir) == Map(1L -> usA * 1000L, 2L -> usB * 1000L, 3L -> (usB + 1L) * 1000L))
+    assert(jobsDuring { Tables.events(spark, dir); () }.isEmpty)
+
+    // a table rewritten under the same path with another schema
+    docs(Seq((2L, "en", 7)).toDF("doc_id", "lang", "n_chars"), "overwrite")
+    val rewritten = Tables.documents(spark, dir)
+    assert(rewritten.columns.toSeq == Seq("doc_id", "lang", "n_chars"))
+    assert(rewritten.collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq == Seq((2L, "en", 7)))
+  }
+
   test("driver events table loads with a timestamp ts and exact ts_ns") {
     val df = Tables.events(spark, sf)
     assert(df.schema("ts").dataType == TimestampType)
