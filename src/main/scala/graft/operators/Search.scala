@@ -241,7 +241,7 @@ object Search extends QueryPack {
   /** Client-side keyset pagination, the loop of the reference's
     * ListPathsAsync (PathIndexClient.cs:66-96): ordered pages of
     * `pageSize` rows, each after the last key of the one before. The
-    * rows come in fetches of up to [[FetchPages]] pages: a fetch is one
+    * rows come in fetches of up to `fetchPages` pages: a fetch is one
     * top-k job, `key gt last` (none on the first) → `orderBy(key)` →
     * `limit` (a one-task sort of a frame known to hold no more than a
     * fetch), and the pages are sliced from its key-ordered rows. The
@@ -250,11 +250,14 @@ object Search extends QueryPack {
     * their contents are exactly those of one job per page over the same
     * frame. Keys must be unique. `key gt last` prunes no file of a
     * hash-distributed snapshot, so every fetch rescans what `df`
-    * selects.
+    * selects. `fetchPages = 1` is the reference's loop itself: one job
+    * per page, and an empty probe after a full last page.
     */
-  def pagedByKey(df: DataFrame, keyCol: String, pageSize: Int): Iterator[Seq[Row]] = {
-    require(pageSize > 0 && pageSize <= Int.MaxValue / FetchPages, s"page size $pageSize")
-    val fetchRows = pageSize * FetchPages
+  def pagedByKey(df: DataFrame, keyCol: String, pageSize: Int,
+                 fetchPages: Int = FetchPages): Iterator[Seq[Row]] = {
+    require(fetchPages > 0, s"fetch pages $fetchPages")
+    require(pageSize > 0 && pageSize <= Int.MaxValue / fetchPages, s"page size $pageSize")
+    val fetchRows = pageSize * fetchPages
     def fetch(after: Option[String]): Seq[Row] = {
       val rest = after.fold(df)(k => df.filter(col(keyCol) > k))
       // on a frame known to hold at most fetchRows rows (a range, a
