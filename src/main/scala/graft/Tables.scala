@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
@@ -22,38 +23,47 @@ object Tables {
     * them. */
   private val InferenceConfs = Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.")
 
-  /** Per table path and inference confs: the file set (name, size,
-    * modification time) last listed there, and the schema inferred
-    * from it. */
+  /** Per table path and inference confs: a digest of the file set
+    * (names, sizes, modification times) last read there, and the schema
+    * inferred from it. Entries live as long as the JVM, one per path and
+    * conf set, each a schema and 32 bytes. */
   private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[(String, Map[String, String]), (Seq[(String, Long, Long)], StructType)]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Map[String, String]), (Seq[Byte], StructType)]()
 
-  /** Table `name` of `dir`, read with its schema given. A read that
-    * infers the schema runs a one-task job over a parquet footer plus
-    * about 60 ms of driver work; with the schema given it runs no job
-    * (6–8 ms, sf0.1 on a 4-core host). So the inferred schema is cached,
-    * keyed by the table's path and the session's parquet confs and kept
-    * with the file set it was inferred from: an unchanged table reads
-    * with no job, and an appended or rewritten one infers again.
+  /** SHA-256 of the files `df`'s scan listed, by name, size and
+    * modification time; None for a scan with no listed file index. */
+  private def fileSet(df: DataFrame): Option[Seq[Byte]] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location }
+      .collect { case i: PartitioningAwareFileIndex =>
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        i.allFiles().map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n").sorted
+          .foreach(l => md.update(l.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        md.digest().toSeq
+      }
+
+  /** Table `name` of `dir`. A read that infers the schema runs a
+    * one-task job over a parquet footer plus about 60 ms of driver work;
+    * with the schema given it runs no job (6–8 ms, sf0.1 on a 4-core
+    * host). So the inferred schema is cached, keyed by the table's path
+    * and the session's parquet confs and kept with a digest of the file
+    * set it was inferred from. A load builds the frame with the cached
+    * schema and compares the files that frame's own listing found: an
+    * unchanged table reads with no job and one listing, and an appended
+    * or rewritten one infers again. That listing's cost on tables of
+    * many files is unmeasured beyond sf0.1.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = new Path(s"$dir/$name.parquet")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val listing = fs.listFiles(path, true)
-    val files = Seq.newBuilder[(String, Long, Long)]
-    while (listing.hasNext) {
-      val f = listing.next()
-      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-    }
-    val key = (fs.makeQualified(path).toString,
+    val key = (path.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(path).toString,
       spark.conf.getAll.filter { case (k, _) => InferenceConfs.exists(k.startsWith) })
-    val listed = files.result()
-    val schema = Option(schemas.get(key)).collect { case (`listed`, s) => s }.getOrElse {
-      val s = spark.read.parquet(path.toString).schema
-      schemas.put(key, listed -> s)
-      s
-    }
-    spark.read.schema(schema).parquet(path.toString)
+    Option(schemas.get(key)).map { case (files, s) => (files, spark.read.schema(s).parquet(path.toString)) }
+      .collect { case (files, df) if fileSet(df).contains(files) => df }
+      .getOrElse {
+        val df = spark.read.parquet(path.toString)
+        fileSet(df).foreach(files => schemas.put(key, files -> df.schema))
+        df
+      }
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

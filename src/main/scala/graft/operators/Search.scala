@@ -241,32 +241,21 @@ object Search extends QueryPack {
   /** Client-side keyset pagination, the loop of the reference's
     * ListPathsAsync (PathIndexClient.cs:66-96): ordered pages of
     * `pageSize` rows, each after the last key of the one before. The
-    * rows come in fetches of up to `fetchPages` pages: a fetch is one
+    * rows come in fetches of up to [[FetchPages]] pages: a fetch is one
     * top-k job, `key gt last` (none on the first) → `orderBy(key)` →
-    * `limit` (a one-task sort of a frame known to hold no more than a
-    * fetch), and the pages are sliced from its key-ordered rows. The
+    * `limit`, and the pages are sliced from its key-ordered rows. The
     * next fetch runs only once a full fetch is used up; a short fetch
     * ends the listing with no empty probe. The pages, their order and
     * their contents are exactly those of one job per page over the same
     * frame. Keys must be unique. `key gt last` prunes no file of a
     * hash-distributed snapshot, so every fetch rescans what `df`
-    * selects. `fetchPages = 1` is the reference's loop itself: one job
-    * per page, and an empty probe after a full last page.
+    * selects.
     */
-  def pagedByKey(df: DataFrame, keyCol: String, pageSize: Int,
-                 fetchPages: Int = FetchPages): Iterator[Seq[Row]] = {
-    require(fetchPages > 0, s"fetch pages $fetchPages")
-    require(pageSize > 0 && pageSize <= Int.MaxValue / fetchPages, s"page size $pageSize")
-    val fetchRows = pageSize * fetchPages
-    def fetch(after: Option[String]): Seq[Row] = {
-      val rest = after.fold(df)(k => df.filter(col(keyCol) > k))
-      // on a frame known to hold at most fetchRows rows (a range, a
-      // limit) the optimizer drops the limit, and the global sort left
-      // costs three jobs; sorting it in one task costs one
-      (if (rest.queryExecution.analyzed.maxRows.exists(_ <= fetchRows))
-        rest.coalesce(1).sortWithinPartitions(col(keyCol))
-      else rest.orderBy(col(keyCol)).limit(fetchRows)).collect().toSeq
-    }
+  def pagedByKey(df: DataFrame, keyCol: String, pageSize: Int): Iterator[Seq[Row]] = {
+    require(pageSize > 0 && pageSize <= Int.MaxValue / FetchPages, s"page size $pageSize")
+    val fetchRows = pageSize * FetchPages
+    def fetch(after: Option[String]): Seq[Row] =
+      after.fold(df)(k => df.filter(col(keyCol) > k)).orderBy(col(keyCol)).limit(fetchRows).collect().toSeq
     // the state: Some(the next fetch's lower bound), or None once a fetch came up short
     Iterator.unfold(Option(Option.empty[String])) { next =>
       next.map(fetch).filter(_.nonEmpty).map { rows =>

@@ -209,28 +209,14 @@ class SearchSpec extends SparkSpec {
   }
 
   test("keyset pagination: one job per returned page, a probe only after a full last page") {
-    def listing(n: Int, keep: org.apache.spark.sql.Column = lit(true)): (Int, Int) = {
-      val df = spark.range(n).selectExpr("lpad(cast(id as string), 6, '0') as key").filter(keep)
-      var pages = Seq.empty[Seq[String]]
-      val jobs = jobsDuring {
-        pages = Search.pagedByKey(df, "key", pageSize = 100, fetchPages = 1)
-          .map(_.map(_.getString(0))).toList
-      }
-      val fresh = df.orderBy("key").collect().map(_.getString(0)).grouped(100).map(_.toSeq).toSeq
-      assert(pages == fresh, s"$n keys")
-      (pages.length, jobs.length)
-    }
-    // a short last page ends the listing
-    assert(listing(250) == (3, 3))
-    // an exact multiple of the page size still probes once
-    assert(listing(300) == (3, 4))
-    assert(listing(300, col("key") > "999999") == (0, 1))
-  }
-
-  test("keyset pagination: one job per fetch of pages, a probe only after a full last fetch") {
     val fetch = 100 * Search.FetchPages
+    // a file scan, as a store read is: a frame of known row count (a
+    // range) would let the optimizer drop the fetch's limit
     def listing(n: Int, keep: org.apache.spark.sql.Column = lit(true)): (Int, Int) = {
-      val df = spark.range(n).selectExpr("lpad(cast(id as string), 6, '0') as key").filter(keep)
+      val dir = tempDir("graft_keyset_jobs").toString
+      spark.range(n).selectExpr("lpad(cast(id as string), 6, '0') as key")
+        .write.mode("overwrite").parquet(dir)
+      val df = spark.read.schema("key STRING").parquet(dir).filter(keep)
       var pages = Seq.empty[Seq[String]]
       val jobs = jobsDuring {
         pages = Search.pagedByKey(df, "key", pageSize = 100).map(_.map(_.getString(0))).toList
@@ -239,7 +225,8 @@ class SearchSpec extends SparkSpec {
       assert(pages == fresh, s"$n keys")
       (pages.length, jobs.length)
     }
-    // a short fetch ends the listing, on a short last page or a full one
+    // a fetch holds ten pages: a short fetch ends the listing, on a
+    // short last page or a full one
     assert(listing(250) == (3, 1))
     assert(listing(300) == (3, 1))
     assert(listing(300, col("key") > "999999") == (0, 1))
